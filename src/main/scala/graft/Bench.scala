@@ -207,7 +207,7 @@ object Bench {
     // ok:false marks a run whose total excludes failed queries — a smaller
     // value than a clean run's must never be read as a speedup
     val ok = errors.isEmpty
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","ok":$ok,"queries":$qs,"runs":${runsJson.mkString("{", ",", "}")},"io":${ioJson.mkString("{", ",", "}")},"errors":$errs,"warm":$warm,"warmup_sec":${num(warmupSec)},"warmup_gc_ms":$warmupGcMs,"gc_total_ms":${gcMs},"cpu_vs_wall":${num(wallVsCpu)},"load_avg_start":${num(loadStart)},"load_avg_end":${num(osBean.getSystemLoadAverage)},"evict":$evict,"memo_level":"${spark.conf.get(graft.operators.Memo.LevelConf, "MEMORY_AND_DISK")}","memo_level_resolved":"${graft.operators.Memo.resolvedLevel(spark)}","sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","ok":$ok,"queries":$qs,"runs":${runsJson.mkString("{", ",", "}")},"io":${ioJson.mkString("{", ",", "}")},"errors":$errs,"warm":$warm,"warmup_sec":${num(warmupSec)},"warmup_gc_ms":$warmupGcMs,"gc_total_ms":${gcMs},"cpu_vs_wall":${num(wallVsCpu)},"load_avg_start":${num(loadStart)},"load_avg_end":${num(osBean.getSystemLoadAverage)},"evict":$evict,"memo_level":"${spark.conf.get(graft.operators.Memo.LevelConf, "MEMORY_AND_DISK")}","memo_level_resolved":"${graft.operators.Memo.level(spark)}","sf":"$sfDir"}"""
     println(json)
     // the driver's BENCH capture truncates long stdout lines, losing
     // "total" and half the per-query map; the full JSON on disk keeps

@@ -66,10 +66,10 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       .config("spark.ui.enabled", "false")
-    // Memo persist level override for single-JVM deployments whose
-    // cached surface × task concurrency exceeds heap — see
-    // graft.operators.Memo.LevelConf for the measured failure mode
-    // this escapes and its cost.
+    // Memo backend override (a StorageLevel name or PARQUET) for
+    // single-JVM deployments whose memo surface × task concurrency
+    // exceeds heap — see graft.operators.Memo.HeapGuardConf for the
+    // measured failure mode PARQUET escapes.
     val b2 = sys.env.get("SPARK_GRAFT_MEMO_LEVEL")
       .fold(b)(b.config("spark.graft.memo.storageLevel", _))
     // Root dir for PARQUET-level memo materializations (the

@@ -236,7 +236,7 @@ object Curation {
       .orderBy(col("doc_id"))
 
   private def packShardsShared(spark: SparkSession, dir: String): DataFrame =
-    Memo.shared(spark, dir, "curation.packShards")(
+    Memo(spark, dir, "curation.packShards")(
       packShardsOn(Tables.spread(spark, Tables.documents(spark, dir))))
 
   /** Incremental shard packing over an APPEND-ONLY corpus: the stored
@@ -950,7 +950,7 @@ object Curation {
       .withColumn("n_chars", length(col("text")).cast(LongType))
   }
 
-  /** The crawl diff as a SHARED INTERMEDIATE ([[Memo.shared]]
+  /** The crawl diff as a SHARED INTERMEDIATE ([[Memo]]
     * checkpoint): one diff per (session, dir) feeds every incremental-
     * maintenance consumer — postings, minhash signatures, RAG chunks,
     * blockhashes, the curation manifest — exactly the production
@@ -962,7 +962,7 @@ object Curation {
     * computing their own diff per action, so their timed windows still
     * measure the operator itself. */
   private[graft] def snapshotDiffShared(spark: SparkSession, dir: String): DataFrame =
-    Memo.shared(spark, dir, "curation.diff") {
+    Memo(spark, dir, "curation.diff") {
       val docs = Tables.spread(spark, Tables.documents(spark, dir))
       snapshotDiffOn(docs, snapshotV2On(docs))
     }

@@ -123,14 +123,14 @@ object Dedup {
     * (session, dir): the verified near-dup pair set is the shared
     * upstream of the transitive-closure grouping, the triangle census,
     * the edit-distance verification and the cross-source matrix.
-    * Shared via [[Memo.shared]] (checkpoint), NOT a CacheManager
+    * Shared via [[Memo]] (checkpoint), NOT a CacheManager
     * persist: the frame's plan IS the named `dedup_ngram_jaccard`
     * query's plan, and a persisted twin would be cache-substituted
     * into the named query's own timed window (r17 verdict: 0 bytes
     * shuffled). Downstream consumers read one materialization; the
     * named query computes fresh. */
   private def verifiedPairs(spark: SparkSession, dir: String): DataFrame =
-    Memo.shared(spark, dir, "dedup_ngram_pairs")(ngramJaccard(spark, dir))
+    Memo(spark, dir, "dedup_ngram_pairs")(ngramJaccard(spark, dir))
 
   /** Character-level verification of the mined near-dup pairs: exact
     * Levenshtein distance over bounded text prefixes, emitted next to
@@ -209,12 +209,12 @@ object Dedup {
     * executors. */
   /** The components closure shared by the quality-aware representative
     * pass (TextAnalysis.bestRep) and the dedup summary — via
-    * [[Memo.shared]] (checkpoint, r18): the frame IS the named
+    * [[Memo]] (checkpoint, r18): the frame IS the named
     * `dedup_components` query's output, so the named query computes its
     * own propagation per action (and is measured on it) while the
     * downstream consumers read one materialization. */
   private[operators] def componentsShared(spark: SparkSession, dir: String): DataFrame =
-    Memo.shared(spark, dir, "dedup.components")(dedupComponents(spark, dir))
+    Memo(spark, dir, "dedup.components")(dedupComponents(spark, dir))
 
   def dedupComponents(spark: SparkSession, dir: String, maxIter: Int = 30): DataFrame = {
     val pairs = verifiedPairs(spark, dir).select(col("doc_a"), col("doc_b"))
@@ -450,12 +450,12 @@ object Dedup {
       .orderBy(col("source"), col("h_idx"))
 
   /** Aggregated per-source signatures shared with both self-join sides
-    * of [[sourceJaccard]] — via [[Memo.shared]] (checkpoint, r18): the
+    * of [[sourceJaccard]] — via [[Memo]] (checkpoint, r18): the
     * frame IS the named `dedup_source_signatures` output, so a
     * CacheManager persist would be substituted straight back into the
     * named query's fresh plan. */
   private def memoSourceSig(spark: SparkSession, dir: String): DataFrame =
-    Memo.shared(spark, dir, "dedup.source_sig")(
+    Memo(spark, dir, "dedup.source_sig")(
       sourceSignaturesFrom(sourceShingles(spark, dir)))
 
   /** (source, x): the exploded per-source shingle-hash stream — the

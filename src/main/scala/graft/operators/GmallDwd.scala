@@ -36,24 +36,14 @@ object GmallDwd {
 
   /** The reference materializes DWD as Kafka topics consumed by every
     * downstream app; the batch analog is computing each shared DWD
-    * frame once per (session, dir) and persisting it ([[Memo]], shared
-    * with GmallDwdDb's envelope). 34 DWS/ADS queries read these three
-    * frames.
+    * frame once per (session, dir) in [[Memo]], the store GmallDwdDb's
+    * envelope also uses. 34 DWS/ADS queries read these three frames.
     *
-    * Cached frames snapshot the parquet at first access: a process
+    * Memo frames snapshot the parquet at first access: a process
     * that rewrites a dir (backfill) or cycles through many dirs must
-    * call [[invalidate]] to unpersist and drop the stale entries. */
-  private def memoized(spark: SparkSession, dir: String, name: String)
-                      (build: => DataFrame): DataFrame =
-    Memo(spark, dir, name)(build)
-
-  /** Drop (and unpersist) every memoized frame for `dir` — all dirs if
-    * None — in this session (all modules' frames, see [[Memo]]). */
-  def invalidate(spark: SparkSession, dir: Option[String] = None): Unit =
-    Memo.invalidate(spark, dir)
-
+    * call [[Memo.invalidate]] to drop the stale entries. */
   def pageLog(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "pageLog")(pageLogBuild(spark, dir))
+    Memo(spark, dir, "pageLog")(pageLogBuild(spark, dir))
 
   private def pageLogBuild(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.events(spark, dir)
@@ -165,7 +155,7 @@ object GmallDwd {
     * five outputs. */
   private def topicLog(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.LogStream
-    memoized(spark, dir, "topicLog")(
+    Memo(spark, dir, "topicLog")(
       LogStream.clean(LogStream.parse(logJson(spark, dir), LogStream.pageLogSchema)))
   }
 
@@ -289,7 +279,7 @@ object GmallDwd {
     * p_name, trademark_id = trademark_name, ...) are aliased back at
     * read time — a free projection that halves the cache footprint. */
   def orderWide(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "orderWide")(orderWideBuild(spark, dir))
+    Memo(spark, dir, "orderWide")(orderWideBuild(spark, dir))
       .select(
         col("order_id"), col("line_no"), col("user_id"), col("dt"),
         col("province_id"), col("province_name"),
@@ -355,7 +345,7 @@ object GmallDwd {
   /** Orders-level stream with lifetime-first markers (per user, and per
     * user among paid orders) — D5's state in batch form. */
   def ordersEnriched(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "ordersEnriched")(ordersEnrichedBuild(spark, dir))
+    Memo(spark, dir, "ordersEnriched")(ordersEnrichedBuild(spark, dir))
 
   private def ordersEnrichedBuild(spark: SparkSession, dir: String): DataFrame = {
     val o = Tables.orders(spark, dir)

@@ -71,13 +71,6 @@ import graft.streaming.{Joins, LogStream}
   */
 object GmallDwdDb {
 
-  /** Drop (and unpersist) the memoized envelope for `dir` (all if
-    * None) — delegates to the shared [[Memo]] store, so this also
-    * clears GmallDwd's frames for the dir (and vice versa): one
-    * backfill invalidation covers everything derived from the dir. */
-  def invalidate(spark: SparkSession, dir: Option[String] = None): Unit =
-    Memo.invalidate(spark, dir)
-
   private def s(c: Column): Column = c.cast(StringType)
   private val noOld: Column = lit(null).cast(MapType(StringType, StringType))
   private def nullStr: Column = lit(null).cast(StringType)

@@ -181,7 +181,7 @@ object Multimodal {
     blockHashBuild(spark, dir).orderBy(col("doc_id"))
 
   private def memoBlockHashes(spark: SparkSession, dir: String): DataFrame =
-    Memo.shared(spark, dir, "mm_blockhash")(blockHashBuild(spark, dir))
+    Memo(spark, dir, "mm_blockhash")(blockHashBuild(spark, dir))
 
   private def blockHashBuild(spark: SparkSession, dir: String): DataFrame =
     blockHashesOn(mediaTable(spark, dir)
@@ -375,12 +375,12 @@ object Multimodal {
     // the decision table reads the checkpoint share below
     phashComponentsBuild(spark, dir).orderBy(col("doc_id"))
 
-  /** Shared closure for the decision table — [[Memo.shared]]
+  /** Shared closure for the decision table — [[Memo]]
     * (checkpoint, r18): the frame IS the named `mm_dup_components`
     * output; unshared, the star-contraction rounds ran once per
     * consumer (measured 2× the pipeline cost in the decision query). */
   private def memoPhashComponents(spark: SparkSession, dir: String): DataFrame =
-    Memo.shared(spark, dir, "mm_dup_components")(phashComponentsBuild(spark, dir))
+    Memo(spark, dir, "mm_dup_components")(phashComponentsBuild(spark, dir))
 
   private def phashComponentsBuild(spark: SparkSession, dir: String): DataFrame = {
     val h = memoBlockHashes(spark, dir)

@@ -78,13 +78,13 @@ object Scd2 {
         col("is_current"))
   }
 
-  /** Shared per (session, dir) via [[Memo.shared]] (checkpoint, r18):
+  /** Shared per (session, dir) via [[Memo]] (checkpoint, r18):
     * the history is read by the as-of consumer and the spec; the named
     * `dim_scd2_order_status` query runs its own window pass per action
     * (the frame IS that query's output, so a CacheManager persist
     * would substitute itself back into the named query's timed plan). */
   private def historyShared(spark: SparkSession, dir: String): DataFrame =
-    Memo.shared(spark, dir, "scd2.orderStatusHistory")(
+    Memo(spark, dir, "scd2.orderStatusHistory")(
       orderStatusHistoryOn(GmallDwdDb.envelope(spark, dir)))
 
   def orderStatusHistory(spark: SparkSession, dir: String): DataFrame =

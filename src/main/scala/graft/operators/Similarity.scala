@@ -280,10 +280,10 @@ object Similarity {
   }
 
   /** Default-panel LSH results shared (checkpoint, NOT CacheManager
-    * persist — see [[Memo.shared]]) by the recall audit and the
+    * persist — see [[Memo]]) by the recall audit and the
     * leaderboard; the named `sim_ann_lsh` query computes fresh. */
   private def annLshShared(spark: SparkSession, dir: String, k: Int): DataFrame =
-    Memo.shared(spark, dir, s"sim.ann.lsh.$k")(annLshBuild(spark, dir, 32, k))
+    Memo(spark, dir, s"sim.ann.lsh.$k")(annLshBuild(spark, dir, 32, k))
 
   val NumCentroids = 16
   val NProbe = 6
@@ -414,10 +414,10 @@ object Similarity {
   }
 
   /** Default-panel IVF results shared (checkpoint, NOT CacheManager
-    * persist — see [[Memo.shared]]) by the recall audit and the
+    * persist — see [[Memo]]) by the recall audit and the
     * leaderboard; the named `sim_ann_ivf` query computes fresh. */
   private def annIvfShared(spark: SparkSession, dir: String, k: Int): DataFrame =
-    Memo.shared(spark, dir, s"sim.ann.ivf.$k")(annIvfBuild(spark, dir, 32, k))
+    Memo(spark, dir, s"sim.ann.ivf.$k")(annIvfBuild(spark, dir, 32, k))
 
   /** IVF search core over an explicit model and an arbitrary
     * (query_id, embedding) query frame — the query side may be a
@@ -693,12 +693,12 @@ object Similarity {
 
   /** The brute-force truth panel at the default query-panel size,
     * shared (checkpoint, NOT CacheManager persist — see
-    * [[Memo.shared]]) by every recall audit and the leaderboard: the
+    * [[Memo]]) by every recall audit and the leaderboard: the
     * exact panel×corpus pass runs once per (session, dir, k) for the
     * audit tier, while the named `sim_ann_topk_float` query computes —
     * and is measured on — its own fresh pass. */
   private def bfTruth(spark: SparkSession, dir: String, k: Int = 5): DataFrame =
-    Memo.shared(spark, dir, s"sim.bf.$k")(bfTruthBuild(spark, dir, k, 32))
+    Memo(spark, dir, s"sim.bf.$k")(bfTruthBuild(spark, dir, k, 32))
 
   /** ANN quality audit: recall@k of the IVF index against the exact
     * brute-force neighbors — the number every index deployment must
@@ -863,7 +863,7 @@ object Similarity {
     pqCodesBuild(spark, dir).orderBy(col("vec_id"))
 
   private def memoPqCodes(spark: SparkSession, dir: String): DataFrame =
-    Memo.shared(spark, dir, "sim_pq_codes")(pqCodesBuild(spark, dir))
+    Memo(spark, dir, "sim_pq_codes")(pqCodesBuild(spark, dir))
 
   private[graft] def pqCodesBuild(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.spread(spark, Tables.embeddings(spark, dir))
@@ -916,10 +916,10 @@ object Similarity {
         .select(col("vec_id").as("query_id"), col("embedding")), k)
 
   /** Default-panel PQ results shared (checkpoint, NOT CacheManager
-    * persist — see [[Memo.shared]]) by the recall audit and the
+    * persist — see [[Memo]]) by the recall audit and the
     * leaderboard; the named `sim_pq_ann` query computes fresh. */
   private def pqAnnShared(spark: SparkSession, dir: String, k: Int): DataFrame =
-    Memo.shared(spark, dir, s"sim.ann.pq.$k")(pqAnn(spark, dir, 32, k))
+    Memo(spark, dir, s"sim.ann.pq.$k")(pqAnn(spark, dir, 32, k))
 
   /** [[pqAnn]] against an arbitrary `(query_id, embedding)` frame —
     * the serving entry point: a STREAM of query vectors scores per
@@ -1048,7 +1048,7 @@ object Similarity {
     ivfpqCodesBuild(spark, dir).orderBy(col("vec_id"))
 
   private def memoIvfpqCodes(spark: SparkSession, dir: String): DataFrame =
-    Memo.shared(spark, dir, "sim_ivfpq_codes")(ivfpqCodesBuild(spark, dir))
+    Memo(spark, dir, "sim_ivfpq_codes")(ivfpqCodesBuild(spark, dir))
 
   private def ivfpqCodesBuild(spark: SparkSession, dir: String): DataFrame = {
       val r = memoIvfpqResiduals(spark, dir)
@@ -1111,10 +1111,10 @@ object Similarity {
     ivfpqAnnBuild(spark, dir, nQueries, k)
 
   /** Default-panel IVF-PQ results shared (checkpoint, NOT CacheManager
-    * persist — see [[Memo.shared]]) by the recall audit and the
+    * persist — see [[Memo]]) by the recall audit and the
     * leaderboard; the named `sim_ivfpq_ann` query computes fresh. */
   private def ivfpqAnnShared(spark: SparkSession, dir: String, k: Int): DataFrame =
-    Memo.shared(spark, dir, s"sim.ann.ivfpq.$k")(ivfpqAnnBuild(spark, dir, 32, k))
+    Memo(spark, dir, s"sim.ann.ivfpq.$k")(ivfpqAnnBuild(spark, dir, 32, k))
 
   private def ivfpqAnnBuild(spark: SparkSession, dir: String, nQueries: Int,
                             k: Int): DataFrame = {

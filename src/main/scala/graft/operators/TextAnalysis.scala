@@ -660,7 +660,7 @@ object TextAnalysis {
     curationDecisionsBuild(spark, dir)
 
   private def curationShared(spark: SparkSession, dir: String): DataFrame =
-    Memo.shared(spark, dir, "text.curation")(curationDecisionsBuild(spark, dir))
+    Memo(spark, dir, "text.curation")(curationDecisionsBuild(spark, dir))
 
   private def curationDecisionsBuild(spark: SparkSession, dir: String): DataFrame = {
     // same content key as Dedup.exact / exactReps, here as the full

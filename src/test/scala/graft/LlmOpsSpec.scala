@@ -315,7 +315,7 @@ class LlmOpsSpec extends AnyFunSuite {
     // top-k rank over verified candidates (the old plan had three: two
     // n×C assignment argmaxes + the rank). Pinned on the NAMED query
     // path: since r18 the named query always builds its plan fresh and
-    // the shared default-panel frame is a checkpoint (Memo.shared),
+    // the shared default-panel frame is a checkpoint (Memo),
     // invisible to the CacheManager — so this pin is deterministic
     // regardless of which suite built the shared frames first (the r17
     // persist-based memo made it order-dependent: cache substitution

@@ -4,13 +4,12 @@ import graft.TestSession
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The memo persist-level knob ([[Memo.LevelConf]]) exists because the
-  * default cached-columnar level is FAIL-HARD when one JVM's memo
-  * surface × task concurrency outgrows heap (SCALE.md "Memory
-  * finding": the sf10eq leg OOM'd at the 12 GB default unrolling
-  * spilled blocks back into the storage pool). These pin the knob's
-  * contract: default unchanged, override honored at build time,
-  * results identical either way. */
+/** [[Memo.LevelConf]] picks one of the memo's two backends: a
+  * block-store `localCheckpoint` at a StorageLevel (default
+  * `MEMORY_AND_DISK`) or a `PARQUET` materialization. These pin the
+  * contract of each: plan-opaque single leaf, configured level honored
+  * per build, materializations keyed by the raw source dir and
+  * committed once, invalidation scoped to graft's own files. */
 class MemoSpec extends AnyFunSuite {
   import TestSession.spark
 
@@ -62,19 +61,13 @@ class MemoSpec extends AnyFunSuite {
     }
   }
 
-  test("NONE skips persistence: shared plan, zero cache footprint, results identical") {
+  test("NONE is rejected with the supported values named, before any build") {
+    // localCheckpoint would silently turn NONE into MEMORY_AND_DISK
     spark.conf.set(Memo.LevelConf, "NONE")
     try {
-      val df = Memo(spark, MemoDir, "memospec_none")(
-        spark.range(0, 100).selectExpr("id * 7 as v"))
-      assert(df.storageLevel === StorageLevel.NONE)
-      // still map-memoized (one plan for all consumers) ...
-      assert(Memo(spark, MemoDir, "memospec_none")(
-        fail("memo hit must not rebuild")) eq df)
-      // ... and every action recomputes from source, same answer
-      val expected = (0L until 100L).map(_ * 7)
-      assert(df.collect().map(_.getLong(0)).sorted.toSeq === expected)
-      assert(df.collect().map(_.getLong(0)).sorted.toSeq === expected)
+      val e = intercept[IllegalArgumentException](
+        Memo(spark, MemoDir, "memospec_none")(fail("a rejected level must not build")))
+      assert(e.getMessage.contains("StorageLevel") && e.getMessage.contains("PARQUET"))
     } finally {
       spark.conf.unset(Memo.LevelConf)
       Memo.invalidate(spark, Some(MemoDir))
@@ -110,8 +103,7 @@ class MemoSpec extends AnyFunSuite {
       // DATA after the source dir changes, so it is deleted, and the
       // next apply rebuilds from source
       Memo.invalidate(spark, Some(MemoDir))
-      assert(!new java.io.File(
-        s"$root/graft.materialized/${MemoDir.replaceAll("[^A-Za-z0-9._-]", "_")}").exists)
+      assert(!new java.io.File(s"$root/graft.materialized/${Memo.segment(MemoDir)}").exists)
       val df3 = inSession(spark)
       assert(builds === 2, "post-invalidate apply must rebuild")
       assert(df3.collect().map(_.getLong(0)).sorted.toSeq === expected)
@@ -124,7 +116,7 @@ class MemoSpec extends AnyFunSuite {
 
   test("racing same-key PARQUET builds commit exactly once and never duplicate rows") {
     // Two sessions (distinct memo keys, so both reach materialize)
-    // racing the SAME (dir, name): the per-path build lock serializes
+    // racing the SAME (dir, name): the per-key build lock serializes
     // them — the loser must find the winner's commit and read it, not
     // build into a shared tmp dir or rename into the committed dir
     // (the HDFS mv-into failure mode: every later read silently
@@ -181,6 +173,35 @@ class MemoSpec extends AnyFunSuite {
     }
   }
 
+  test("PARQUET dirs that sanitize to the same name keep separate materializations") {
+    // `a_b` and `a/b` both sanitize to `a_b`; the segment's digest of
+    // the raw dir must keep their rows and their invalidation apart
+    val root = java.nio.file.Files.createTempDirectory("memospec-seg").toString
+    val (dirA, dirB) = (s"$MemoDir/a_b", s"$MemoDir/a/b")
+    val s2 = spark.newSession()
+    def memo(s: org.apache.spark.sql.SparkSession, dir: String)
+            (build: => org.apache.spark.sql.DataFrame) = {
+      s.conf.set(Memo.LevelConf, "PARQUET")
+      s.conf.set(Memo.DirConf, root)
+      Memo(s, dir, "memospec_seg")(build).collect().map(_.getLong(0)).sorted.toSeq
+    }
+    val (timesTwo, timesThree) = ((0L until 10L).map(_ * 2), (0L until 10L).map(_ * 3))
+    try {
+      assert(memo(spark, dirA)(spark.range(0, 10).selectExpr("id * 2 as v")) === timesTwo)
+      assert(memo(spark, dirB)(spark.range(0, 10).selectExpr("id * 3 as v")) === timesThree,
+        "a second dir read the first dir's materialization")
+      Memo.invalidate(spark, Some(dirA))
+      // a fresh session finds dirB's commit still on disk
+      assert(memo(s2, dirB)(fail("invalidating dirA deleted dirB's materialization")) ===
+        timesThree)
+    } finally {
+      Memo.invalidate(s2, Some(dirB))
+      Memo.invalidate(spark, Some(dirB))
+      spark.conf.unset(Memo.LevelConf); spark.conf.unset(Memo.DirConf)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    }
+  }
+
   test("the conf is read per BUILD, not per process: an already-memoized frame keeps its level") {
     val before = Memo(spark, MemoDir, "memospec_sticky")(spark.range(0, 10).toDF("id"))
     spark.conf.set(Memo.LevelConf, "DISK_ONLY")
@@ -208,9 +229,8 @@ class MemoSpec extends AnyFunSuite {
     // the known-good envelope (96 GB / 32 = 3 GB per task) is untouched
     assert(Memo.guardDecision(None, "warn", 96 * gb, 32) === (("MEMORY_AND_DISK", false)))
     assert(Memo.guardDecision(None, "auto", 96 * gb, 32) === (("MEMORY_AND_DISK", false)))
-    // PARQUET and NONE have no cached-batch heap residency — never guarded
+    // PARQUET has no block-store heap residency — never guarded
     assert(Memo.guardDecision(Some("PARQUET"), "warn", 12 * gb, 32) === (("PARQUET", false)))
-    assert(Memo.guardDecision(Some("NONE"), "warn", 12 * gb, 32) === (("NONE", false)))
     // off silences but never re-levels
     assert(Memo.guardDecision(None, "off", 12 * gb, 32) === (("MEMORY_AND_DISK", false)))
     // the boundary is heap PER TASK, not absolute heap: 12 GB on 8

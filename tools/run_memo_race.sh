@@ -29,7 +29,6 @@ for i in $(seq 1 "$N"); do
   # when they're needed (r16 advice)
   RA=0; wait $A || RA=$?
   RB=0; wait $B || RB=$?
-  KEY="$ROOT/graft.materialized/_race_dir"
   COMMITS=$(find "$ROOT/graft.materialized" -name _SUCCESS | wc -l)
   TMPS=$(find "$ROOT/graft.materialized" -name "*.tmp.*" | wc -l)
   NESTED=$(find "$ROOT/graft.materialized" -path "*race_probe/*race_probe*" | wc -l)
