@@ -124,7 +124,9 @@ object GmallAds {
     * per side). Null dim ids cannot occur here: every key column is
     * produced by the upstream DWS joins against the dim tables
     * (trademark/category/spu ids are join keys of INNER dim joins), so
-    * a row with a null key never reaches this aggregation. The oracle
+    * a row with a null key never reaches this aggregation. OdsToAdsSpec
+    * ("ADS name re-attach: sideNameMap join keys are non-null …") pins
+    * this on both commodity DWS frames at sf0.001 and sf0.01. The oracle
     * SQL pins the same inner-join-on-`=` semantics, so if a future
     * schema change ever introduced null keys, the hash gate would flag
     * BOTH engines' drift together rather than silently diverging. */

@@ -2,7 +2,11 @@ package graft.serving
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.{ConcurrentHashMap, Executors}
+import java.util.UUID
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, Executors, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{Row, SparkSession}
@@ -30,16 +34,35 @@ import graft.SparkEntry
   * Scale shape: serving reads ADS-grain frames — the row counts are
   * (days × channel-like keys), megabytes at any corpus scale — so each
   * query is collected ONCE per server and memoized; requests after the
-  * first are pure in-memory shaping. In a production deployment the
-  * same table is a foreachBatch-maintained [[AdsStore]] bound via
-  * [[bindStore]] — the HTTP layer is identical either way, and the
-  * memo turns per-version (ServingSpec proves micro-batch publishes
-  * are visible through live HTTP).
+  * first are pure in-memory shaping. The dashboard is served as one
+  * unit: the first Sugar request queues every other distinct Sugar
+  * query not bound to a store for `defaultParallelism` daemon prefetch
+  * threads, which fill the same per-query memo slots the routes read (a
+  * route whose query is still in flight waits on that slot), so the
+  * DWD/DWS memo builds and ADS collects run on idle cores instead of one
+  * per request. [[stop]] cancels the prefetch job group and joins the
+  * prefetch threads and the handler pool. In a production deployment
+  * the same table is a foreachBatch-maintained [[AdsStore]] bound via
+  * [[bindStore]] — the HTTP layer is identical either way, and the memo
+  * turns per-version (ServingSpec proves micro-batch publishes are
+  * visible through live HTTP).
   */
 final class QueryServer(spark: SparkSession, sfDir: String, port: Int = 0) {
 
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   private val pool = Executors.newFixedThreadPool(4)
+
+  /** Spark job group of this server's prefetch jobs (and the name
+    * prefix of its prefetch threads), unique per server so [[stop]]
+    * cancels only its own work. */
+  private[graft] val prefetchGroup = s"graft-sugar-prefetch-${UUID.randomUUID()}"
+
+  /** The prefetch threads, started by the first Sugar request and
+    * never before: a server that only answers `/api/query` starts
+    * none. Both vars are written under `this`, so no thread starts
+    * after [[stop]]. */
+  @volatile private var prefetchers: Seq[Thread] = Nil
+  @volatile private var stopped = false
 
   /** Per-key lazy holder: `computeIfAbsent` only ever creates the
     * cheap Slot (CHM requires its mapping fn be short — a multi-second
@@ -54,10 +77,7 @@ final class QueryServer(spark: SparkSession, sfDir: String, port: Int = 0) {
 
   /** Test probe: the memo's current keys (AdsStoreSpec's concurrency
     * hammer asserts boundedness and rebind eviction through it). */
-  private[graft] def cachedKeys: Set[String] = {
-    import scala.jdk.CollectionConverters._
-    cache.keySet.asScala.toSet
-  }
+  private[graft] def cachedKeys: Set[String] = cache.keySet.asScala.toSet
 
   /** Hard cap on rows the generic route ever collects: keeps any
     * named query — including corpus-sized ones — driver-safe, and
@@ -135,6 +155,31 @@ final class QueryServer(spark: SparkSession, sfDir: String, port: Int = 0) {
       }
     }
 
+  /** On the first Sugar request, queue every other unbound Sugar query
+    * for `defaultParallelism` prefetch threads. Each prefetch is a
+    * [[loadSugar]] into the same Slot the route reads, so no query runs
+    * twice. A failed prefetch is dropped: the Slot's lazy value stays
+    * unset and the route's own request recomputes it (and answers its
+    * 500). */
+  private def prefetchOthers(first: String): Unit = synchronized {
+    if (prefetchers.isEmpty && !stopped) {
+      val queue = new ConcurrentLinkedQueue[String](
+        SugarApi.endpoints.values.map(_.query).toSeq.distinct.filter(_ != first).asJava)
+      prefetchers = (1 to spark.sparkContext.defaultParallelism).map { i =>
+        val t = new Thread(() =>
+          Iterator.continually(queue.poll()).takeWhile(q => q != null && !stopped)
+            .filterNot(stores.containsKey).foreach { q =>
+              spark.sparkContext.setJobGroup(prefetchGroup, s"prefetch $q", interruptOnCancel = true)
+              try loadSugar(q) catch { case NonFatal(_) => () }
+            },
+          s"$prefetchGroup-$i")
+        t.setDaemon(true)
+        t.start()
+        t
+      }
+    }
+  }
+
   /** Generic route: one plan-side-limited collect per query, shared by
     * every request regardless of its `?limit=`. */
   private def loadApi(name: String): (Array[String], Array[Row]) =
@@ -168,6 +213,7 @@ final class QueryServer(spark: SparkSession, sfDir: String, port: Int = 0) {
       val path = ex.getRequestURI.getPath
       SugarApi.endpoints.get(path) match {
         case Some(SugarApi.Endpoint(query, shape)) =>
+          if (prefetchers.isEmpty) prefetchOthers(query)
           val (fields, rows) = loadSugar(query)
           val dtIdx = fields.indexOf("dt")
           val slice =
@@ -226,9 +272,24 @@ final class QueryServer(spark: SparkSession, sfDir: String, port: Int = 0) {
     server.getAddress.getPort
   }
 
+  /** Stop serving and join every thread this server started, so no
+    * handler or prefetch job outlives it (a build finishing after a
+    * caller's `Memo.invalidate` would re-insert a stale frame). A
+    * prefetch between two jobs starts its next one after a cancel, so
+    * the cancel repeats until its thread has ended; an idle prefetcher
+    * ends at once and cancels nothing. */
   def stop(): Unit = {
     server.stop(0)
+    val threads = synchronized { stopped = true; prefetchers }
     pool.shutdown()
+    threads.foreach { t =>
+      t.join(100)
+      while (t.isAlive) {
+        spark.sparkContext.cancelJobGroup(prefetchGroup)
+        t.join(100)
+      }
+    }
+    pool.awaitTermination(Long.MaxValue, TimeUnit.MILLISECONDS)
   }
 }
 

@@ -349,6 +349,21 @@ class OdsToAdsSpec extends AnyFunSuite {
       s"null-keyed group mishandled: ${rows.toSeq}")
   }
 
+  test("ADS name re-attach: sideNameMap join keys are non-null in both commodity DWS frames (sf0.001, sf0.01)") {
+    // GmallAds.sideNameMap re-attaches names with an INNER equi-join on
+    // these keys, which would silently drop a null-keyed group
+    val keys = Seq("trademark_id", "category1_id", "category2_id", "category3_id")
+    for (dir <- Seq(sf, "/root/testdata/sf0.01");
+         (frame, df) <- Seq(
+           "tradeTmCatUserSpuOrder" -> GmallDws.tradeTmCatUserSpuOrder(spark, dir),
+           "tradeTmCatUserRefund" -> GmallDws.tradeTmCatUserRefund(spark, dir))) {
+      val row = df.agg(count(lit(1)), keys.map(k => count(when(col(k).isNull, lit(1)))): _*).head()
+      assert(row.getLong(0) > 0, s"$frame at $dir is empty")
+      keys.indices.foreach(i => assert(row.getLong(i + 1) == 0L,
+        s"$frame at $dir has ${row.getLong(i + 1)} null ${keys(i)} rows"))
+    }
+  }
+
   test("traffic leg: topic_log stream -> DWD split parquet -> DWS parquet -> ADS == batch") {
     import spark.implicits._
     val odsDir = Files.createTempDirectory("ods_log").toString

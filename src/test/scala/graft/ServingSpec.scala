@@ -5,10 +5,15 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -422,5 +427,121 @@ class ServingSpec extends AnyFunSuite with BeforeAndAfterAll {
         victimIds.contains(rowRe.findFirstMatchIn(r).get.group(1).toLong)),
         "erasure touched non-victim rows or left residue")
     } finally live.stop()
+  }
+
+  // ------------------------------------------------ dashboard prefetch
+  // These run after "all 23 sugar endpoints": every slot of the shared
+  // server is filled by then, so its prefetch threads start no more
+  // jobs and any active job belongs to the server under test.
+
+  /** Deliver pending listener events (execution-listener callbacks and
+    * the status store's job ends). `listenerBus.waitUntilEmpty` is
+    * public in bytecode. */
+  private def drainListeners(): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+  }
+
+  private def prefetchThreads(srv: QueryServer): Seq[Thread] =
+    Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(t => t.isAlive && t.getName.startsWith(srv.prefetchGroup))
+
+  private def awaitUntil(what: String)(done: => Boolean): Unit = {
+    val deadline = System.nanoTime() + 300L * 1000000000L
+    while (!done) {
+      assert(System.nanoTime() < deadline, s"timed out waiting for $what")
+      Thread.sleep(100)
+    }
+  }
+
+  private val sugarQueries = SugarApi.endpoints.values.map(_.query).toSeq.distinct.sorted
+
+  test("first sugar request prefetches every other unbound sugar query, each collected exactly once; stop() joins") {
+    // a fresh session: its own memo frames and its own execution
+    // listeners, so every collect counted here is this server's
+    val fresh = spark.newSession()
+    val collects = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    fresh.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "collect") collects.add(qe.analyzed)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    })
+
+    val bound = "ads_gmv"
+    val unbound = sugarQueries.filterNot(_ == bound)
+    val srv = new QueryServer(fresh, sf, port = 0)
+    val port = srv.start()
+    try {
+      // bound before the first request; nothing published yet
+      srv.bindStore(bound, Files.createTempDirectory("prefetch_store").toString + "/gmv")
+      // a server that has answered only /api/query starts no prefetch thread
+      assert(getAt(port, s"/api/query/$bound")._1 == 200)
+      assert(prefetchThreads(srv).isEmpty, "prefetch threads started before any sugar request")
+      assert(getAt(port, "/gmall/realtime/trade/total")._1 == 200)
+      // no further requests: the prefetch threads alone collect the rest
+      awaitUntil("the prefetch threads to collect every unbound sugar query") {
+        drainListeners(); collects.size >= unbound.size
+      }
+      assert(unbound.map(q => s"sugar:$q").toSet.subsetOf(srv.cachedKeys))
+      assert(!srv.cachedKeys.exists(_.startsWith(s"sugar:$bound")), "a bound name was prefetched")
+    } finally srv.stop()
+    drainListeners()
+    // attribute each collect to its query by plan and output names
+    // (ads_gmv and ads_trade_total_amount differ only in a column
+    // name); every memo frame exists by now, so planning builds nothing
+    val plans = sugarQueries.map(q => q -> SparkEntry.queries(q)(fresh, sf).queryExecution.analyzed)
+    def same(a: LogicalPlan, b: LogicalPlan) = a.sameResult(b) && a.schema == b.schema
+    for ((q, p) <- plans; (q2, p2) <- plans if q < q2)
+      assert(!same(p, p2), s"$q and $q2 plan alike; collects can't be told apart")
+    val got = collects.asScala.toSeq
+    for ((q, p) <- plans) {
+      val n = got.count(same(_, p))
+      assert(n == (if (q == bound) 0 else 1), s"$q collected $n times")
+    }
+    assert(got.size == unbound.size, s"${got.size} collects for ${unbound.size} queries")
+    assert(prefetchThreads(srv).isEmpty, "prefetch threads outlived stop()")
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty, "a Spark job outlived stop()")
+  }
+
+  test("stop() with prefetches in flight cancels them and joins: no job or thread outlives it") {
+    val srv = new QueryServer(spark.newSession(), sf, port = 0) // cold memo: builds in flight
+    val port = srv.start()
+    assert(getAt(port, "/gmall/realtime/traffic/uvCt")._1 == 200)
+    srv.stop()
+    assert(prefetchThreads(srv).isEmpty, "prefetch threads outlived stop()")
+    drainListeners()
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty, "a Spark job outlived stop()")
+  }
+
+  test("a failed prefetch caches nothing: its route recomputes and answers the same 500 as a first-hand failure") {
+    // events only: the traffic queries run, every order-side query
+    // fails on its missing tables
+    val partial = Files.createTempDirectory("prefetch_partial")
+    Files.createSymbolicLink(partial.resolve("events.parquet"), Paths.get(sf, "events.parquet"))
+    val dir = partial.toString
+    val outcome = sugarQueries.map(q =>
+      q -> Try(SparkEntry.queries(q)(spark, dir).collect()).failed.toOption.map(_.getMessage)).toMap
+    assert(outcome.values.exists(_.isEmpty) && outcome.values.exists(_.nonEmpty),
+      s"fixture must mix passing and failing queries: $outcome")
+    val srv = new QueryServer(spark, dir, port = 0)
+    val port = srv.start()
+    try {
+      val first = SugarApi.endpoints.collectFirst { case (r, e) if outcome(e.query).nonEmpty => r }.get
+      assert(getAt(port, first)._1 == 500)
+      // every other query's prefetch has started before the routes are
+      // read; a route whose prefetch is still running waits for it
+      awaitUntil("every prefetch to start")(
+        sugarQueries.forall(q => srv.cachedKeys.contains(s"sugar:$q")))
+      SugarApi.endpoints.foreach { case (route, e) =>
+        outcome(e.query) match {
+          case Some(msg) =>
+            assert(getAt(port, route) ==
+              ((500, s"""{"status":1,"msg":"${SugarApi.jsonEscape(msg)}"}""")), route)
+          case None =>
+            assert(getAt(port, route) == get(route), s"$route differs from the full fixture's")
+        }
+      }
+    } finally srv.stop()
   }
 }
