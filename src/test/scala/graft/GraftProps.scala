@@ -351,6 +351,34 @@ object GraftProps extends Properties("graft") {
     } yield (a, b))
   } yield es
 
+  /** Driver-side union-find reference: vertex -> min id of its component. */
+  private def unionFindRoots(edges: Seq[(Long, Long)]): Long => Long = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElse(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    find
+  }
+
+  // edges spread over 1-4 partitions with a 1-3 vertex seed cap: local
+  // union-find sets are fragments, so seeds conflict and rounds run
+  property("seeded component labels == union-find on repartitioned random graphs") =
+    forAll(genEdges, Gen.choose(1, 4), Gen.choose(1, 3)) { (es, parts, cap) =>
+      import spark.implicits._
+      val labels = graft.operators.Dedup.componentLabels(
+          es.toDF("doc_a", "doc_b").repartition(parts), maxIter = 64, seedCap = cap)
+        .as[(Long, Long)].collect()
+      val root = unionFindRoots(es)
+      val verts = es.flatMap { case (a, b) => Seq(a, b) }.distinct
+      labels.map(_._1).sorted.sameElements(verts.sorted) &&
+        labels.forall { case (v, r) => r == root(v) }
+    }
+
   property("star-contraction components == union-find on random graphs") =
     forAll(genEdges) { es =>
       import spark.implicits._
@@ -359,17 +387,9 @@ object GraftProps extends Properties("graft") {
         val labels = graft.operators.Dedup.starLabels(
             edges.toDF("doc_a", "doc_b"))
           .as[(Long, Long)].collect().toMap
-        val parent = scala.collection.mutable.Map[Long, Long]()
-        def find(x: Long): Long = {
-          val p = parent.getOrElse(x, x)
-          if (p == x) x else { val r = find(p); parent(x) = r; r }
-        }
-        edges.foreach { case (a, b) =>
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
+        val root = unionFindRoots(edges)
         val verts = edges.flatMap { case (a, b) => Seq(a, b) }.distinct
-        verts.forall(v => labels.getOrElse(v, v) == find(v))
+        verts.forall(v => labels.getOrElse(v, v) == root(v))
       }
     }
 

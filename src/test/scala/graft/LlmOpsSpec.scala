@@ -680,6 +680,28 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(ok.nonEmpty && ok.forall(_._2 == 0L))
   }
 
+  test("seeded components: a chain split round-robin over partitions needs rounds; one partition needs none") {
+    import spark.implicits._
+    val n = 12
+    // partition p holds the edges (i, i+1) with i % 4 == p: no two edges
+    // of a partition touch, so every seed set is one edge and each inner
+    // vertex gets two seed labels
+    val spread = spark.sparkContext.parallelize(0 until 4, 4)
+      .flatMap(p => (p until n - 1 by 4).map(i => (i.toLong, i + 1L)))
+      .toDF("doc_a", "doc_b")
+    val e = intercept[IllegalStateException] {
+      Dedup.componentLabels(spread, maxIter = 1)
+    }
+    assert(e.getMessage.contains("no fixpoint"))
+    val labels = Dedup.componentLabels(spread, maxIter = 30).as[(Long, Long)].collect()
+    assert(labels.map(_._1).sorted.sameElements(0L until n.toLong))
+    assert(labels.forall(_._2 == 0L))
+    // the same chain in one partition: the seed is the fixpoint, zero rounds
+    val whole = Dedup.componentLabels(spread.coalesce(1), maxIter = 0)
+      .as[(Long, Long)].collect()
+    assert(whole.length == n && whole.forall(_._2 == 0L))
+  }
+
   test("quality scoring + filter stream ≡ batch (online curation gate)") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.OutputMode
