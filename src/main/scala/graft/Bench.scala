@@ -86,16 +86,6 @@ object Bench {
     val ioJson = scala.collection.mutable.ListBuffer.empty[String]
     val io = new IoListener
     spark.sparkContext.addSparkListener(io)
-    // optional: drop every memoized frame after each query. Default
-    // OFF — memo sharing is the engine's real shape (the batch analog
-    // of shared DWD topics) and every recorded BENCH number uses it.
-    // ON bounds the single-JVM cached surface to ONE query's memos at
-    // a time, which is what lets an amplified leg whose ACCUMULATED
-    // surface exceeds heap+disk run at all; each query then pays its
-    // own memo build in run 1 and repeat-min still reports the warm
-    // plan. Numbers from evict-mode legs are only comparable to other
-    // evict-mode legs — the JSON records the mode for that reason.
-    val evict = sys.env.get("SPARK_GRAFT_BENCH_EVICT").exists(_ == "1")
     // optional comma-separated allowlist for timing a few queries in
     // isolation (plan-iteration loop); the driver never sets it
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -107,17 +97,10 @@ object Bench {
     // whichever query touched them first, so per-query deltas rotated
     // identity across same-code runs; after this pass every timed run
     // measures a warm-memo steady-state query and the whole build cost
-    // is charged to its own "warmup_sec" line. Skipped in evict mode,
-    // whose entire point is that each query pays its own build inside
-    // a bounded cached surface (prewarming would accumulate every
-    // memo at once — the exact overflow evict exists to avoid).
-    // SPARK_GRAFT_BENCH_WARM=0 skips it explicitly (the r15-style
-    // incremental-build attribution) so warm-vs-no-warm A/Bs run the
-    // same binary; the JSON records which mode produced the numbers.
-    val warm = !evict && !sys.env.get("SPARK_GRAFT_BENCH_WARM").contains("0")
+    // is charged to its own "warmup_sec" line.
     val warm0 = System.nanoTime()
     val warmGc0 = gcMs
-    if (warm) selected.foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       if (!spark.sparkContext.isStopped)
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         catch {
@@ -179,8 +162,6 @@ object Bench {
           }
           None
         }
-      if (evict && !spark.sparkContext.isStopped)
-        graft.operators.Memo.invalidate(spark, None)
       timed match {
         case Some((r1, r2, s1, s2, gc1, gc2)) =>
           runsJson += s"\"$name\":[${num(r1)},${num(r2)}]"
@@ -207,7 +188,7 @@ object Bench {
     // ok:false marks a run whose total excludes failed queries — a smaller
     // value than a clean run's must never be read as a speedup
     val ok = errors.isEmpty
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","ok":$ok,"queries":$qs,"runs":${runsJson.mkString("{", ",", "}")},"io":${ioJson.mkString("{", ",", "}")},"errors":$errs,"warm":$warm,"warmup_sec":${num(warmupSec)},"warmup_gc_ms":$warmupGcMs,"gc_total_ms":${gcMs},"cpu_vs_wall":${num(wallVsCpu)},"load_avg_start":${num(loadStart)},"load_avg_end":${num(osBean.getSystemLoadAverage)},"evict":$evict,"memo_level":"${spark.conf.get(graft.operators.Memo.LevelConf, "MEMORY_AND_DISK")}","memo_level_resolved":"${graft.operators.Memo.level(spark)}","sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","ok":$ok,"queries":$qs,"runs":${runsJson.mkString("{", ",", "}")},"io":${ioJson.mkString("{", ",", "}")},"errors":$errs,"warmup_sec":${num(warmupSec)},"warmup_gc_ms":$warmupGcMs,"gc_total_ms":${gcMs},"cpu_vs_wall":${num(wallVsCpu)},"load_avg_start":${num(loadStart)},"load_avg_end":${num(osBean.getSystemLoadAverage)},"memo_level":"${spark.conf.get(graft.operators.Memo.LevelConf, "MEMORY_AND_DISK")}","memo_level_resolved":"${graft.operators.Memo.level(spark)}","sf":"$sfDir"}"""
     println(json)
     // the driver's BENCH capture truncates long stdout lines, losing
     // "total" and half the per-query map; the full JSON on disk keeps

@@ -4,11 +4,18 @@ import org.apache.spark.sql.SparkSession
 
 /** Session factory for the graft engine.
   *
-  * Defaults tuned for the test harness (local[N], 32 shuffle partitions)
-  * but every knob here is what we'd set cluster-side too: AQE (runtime
+  * Every knob here is what we'd set cluster-side too: AQE (runtime
   * re-planning + skew-join handling), UTC session timezone (oracle
   * parity), and a broadcast threshold generous enough that every
   * dimension table in the star schema broadcasts.
+  *
+  * Shuffle width is set in two places. `shufflePartitions` sets only
+  * `spark.sql.shuffle.partitions`, which streaming state stores (the
+  * state partition count is fixed at a query's first checkpoint) and
+  * non-AQE exchanges use; `StreamingSpec` pins 4 state partitions on
+  * the test session. Batch shuffles run under AQE and start at
+  * `initialPartitionNum`, 32 unless `SPARK_GRAFT_INITIAL_PARTITIONS`
+  * is set, before coalescing, whatever `shufflePartitions` says.
   */
 object GraftSession {
   def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",

@@ -140,7 +140,8 @@ object GmallDwdDb {
   val EnvelopeSaltKConf = "spark.graft.envelope.saltK"
 
   /** The envelope's per-table (optionally salted) repartitioning as a
-    * standalone step, so the skew measurement (MeasureSkew) drives the
+    * standalone step, so the skew measurement (the MeasureSkew probe,
+    * `git show ebc108b:src/test/scala/graft/MeasureSkew.scala`) drove the
     * EXACT keying the production loader uses over a synthetic skewed
     * frame. saltK spreads each fact table over K partitions keyed by
     * the mutation id's hash; config tables stay unsalted. */

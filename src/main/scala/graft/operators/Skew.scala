@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
   * aggregation skew and joins where the skewed side must stay
   * shuffled).
   *
-  * WHEN TO USE WHICH — measured, not guessed (MeasureJoinSkew at
-  * sf0.1, SCALE.md "AQE vs salting crossover"): for JOIN skew prefer
+  * WHEN TO USE WHICH — measured, not guessed (the MeasureJoinSkew probe
+  * at sf0.1, `git show ebc108b:src/test/scala/graft/MeasureJoinSkew.scala`;
+  * SCALE.md "Skew"): for JOIN skew prefer
   * AQE's skew-join and do nothing here. With a 90%-one-key fact of
   * 6.6 M rows (hot key 4.7 M) AQE ran 2.16 s vs 3.54 s unmitigated
   * (1.6× win) while [[saltedJoin]] ran 4.24 s — the `salts`-way

@@ -3,6 +3,7 @@ package graft.operators
 import graft.TestSession
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** [[Memo.LevelConf]] picks one of the memo's two backends: a
   * block-store `localCheckpoint` at a StorageLevel (default
@@ -150,6 +151,63 @@ class MemoSpec extends AnyFunSuite {
       Memo.invalidate(spark, Some(MemoDir))
       spark.conf.unset(Memo.LevelConf); spark.conf.unset(Memo.DirConf)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    }
+  }
+
+  private val XprocName = "memospec_xproc"
+
+  /** A second process racing one PARQUET key, played deterministically
+    * inside this process's build: it commits its own rows at the
+    * target path (with `_SUCCESS` only if `committed`) before this
+    * build's tmp write runs. Hands `check` the memo's rows (or the
+    * failure) and every path left under the memo root. */
+  private def foreignCommitRace(committed: Boolean)
+                               (check: (scala.util.Try[Seq[Long]], Seq[java.nio.file.Path]) => Unit): Unit = {
+    val root = java.nio.file.Files.createTempDirectory("memospec-xproc").toString
+    val target = new java.io.File(s"$root/graft.materialized/${Memo.segment(MemoDir)}/$XprocName")
+    spark.conf.set(Memo.LevelConf, "PARQUET")
+    spark.conf.set(Memo.DirConf, root)
+    try {
+      val read = scala.util.Try(Memo(spark, MemoDir, XprocName) {
+        spark.range(100, 105).toDF("id").write.parquet(target.toString)
+        if (!committed) Seq("_SUCCESS", "._SUCCESS.crc").foreach(new java.io.File(target, _).delete())
+        spark.range(0, 10).toDF("id")
+      }.collect().map(_.getLong(0)).sorted.toSeq)
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      try check(read, walk.iterator().asScala.toSeq) finally walk.close()
+    } finally {
+      Memo.invalidate(spark, Some(MemoDir))
+      spark.conf.unset(Memo.LevelConf); spark.conf.unset(Memo.DirConf)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    }
+  }
+
+  /** Paths `name/name*`: a tmp dir renamed INTO the committed dir. */
+  private def nestedUnder(paths: Seq[java.nio.file.Path], name: String) =
+    paths.filter(p => p.getParent != null && p.getParent.getFileName.toString == name &&
+      p.getFileName.toString.startsWith(name))
+
+  private def named(paths: Seq[java.nio.file.Path])(pred: String => Boolean) =
+    paths.filter(p => pred(p.getFileName.toString))
+
+  test("PARQUET cross-process race: the loser reads the winner's commit, one _SUCCESS, no tmp residue") {
+    foreignCommitRace(committed = true) { (read, paths) =>
+      assert(read.get === (100L until 105L), "the loser must read the winner's rows, not its own")
+      assert(named(paths)(_ == "_SUCCESS").size === 1)
+      assert(named(paths)(_.contains(".tmp.")).isEmpty, s"tmp residue: $paths")
+      assert(nestedUnder(paths, XprocName).isEmpty, s"nested commit: $paths")
+    }
+  }
+
+  test("PARQUET cross-process race: an uncommitted foreign dir fails loudly; tmp is never moved inside it") {
+    foreignCommitRace(committed = false) { (read, paths) =>
+      val e = intercept[IllegalStateException](read.get)
+      assert(e.getMessage.contains("no committed winner"))
+      // FileSystem.rename onto an existing dir moves tmp INSIDE it, and
+      // every later read of the key would see both row sets
+      assert(nestedUnder(paths, XprocName).isEmpty, s"tmp moved into the foreign dir: $paths")
+      assert(named(paths)(_.contains(".tmp.")).isEmpty, s"tmp residue: $paths")
+      assert(named(paths)(_ == "_SUCCESS").isEmpty)
     }
   }
 

@@ -238,6 +238,19 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed == batch)
   }
 
+  test("state partitions follow shufflePartitions (TestSession: 4), not AQE's batch initial width") {
+    import spark.implicits._
+    val mem = MemoryStream[(Long, Long)](spark)
+    val q = mem.toDS().toDF("k", "v").groupBy("k").agg(sum("v").as("s"))
+      .writeStream.format("memory").queryName("state_width")
+      .outputMode(OutputMode.Complete).start()
+    try {
+      mem.addData((1L, 1L), (2L, 2L), (1L, 3L))
+      q.processAllAvailable()
+      assert(q.lastProgress.stateOperators.head.numShufflePartitions === 4)
+    } finally q.stop()
+  }
+
   test("hopping window: streaming two-batch run equals the batch plan at rest") {
     import spark.implicits._
     // the an_hopping_window shape (1 h window, 30 min slide — each

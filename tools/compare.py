@@ -16,16 +16,24 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df.sort_values(by=list(df.columns), kind="mergesort", na_position="first")
     return df.reset_index(drop=True)
 
-def run(sf_dir, out_dir):
-    """Core gate compare; returns (n_pass, n_fail, results) so
-    tools/gate.py can compose the per-round gate artifact from the
-    same code path the CLI uses."""
+TABLES = ("region nation customer supplier part orders lineitem "
+          "events documents embeddings").split()
+
+def connect(sf_dir):
+    """DuckDB connection with one view per fixture table present in
+    sf_dir, under the names the oracle SQL uses."""
     con = duckdb.connect()
-    for t in ("region nation customer supplier part orders lineitem "
-              "events documents embeddings").split():
+    for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    return con
+
+def run(sf_dir, out_dir):
+    """Core gate compare; returns (n_pass, n_fail, results) so
+    tools/gate.py can compose the gate artifact from the same code
+    path the CLI uses."""
+    con = connect(sf_dir)
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
     results = {}

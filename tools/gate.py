@@ -1,105 +1,56 @@
 #!/usr/bin/env python3
-"""Per-round gate artifact generator WITH the oracle-wall tripwire as
-a hard assertion (r13 verdict task 8).
+"""Gate artifact generator WITH the oracle-wall tripwire as a hard
+assertion.
 
-Previously `gate/gate_r{N}.json` was hand-assembled and the oracle
-budget lived in prose; the hazard class that starved the round-11 gate
-(one pathological oracle family at 387 s/query) could in principle
-recur silently. This tool makes the artifact itself carry the evidence
-and FAIL LOUDLY:
+The artifact carries its own evidence and FAILS LOUDLY, so the hazard
+that once starved the driver's correctness gate (one pathological
+oracle family at 387 s/query) cannot recur silently:
 
-  - runs the DuckDB compare (tools/compare.py's exact code path) at
-    BOTH sf0.001 and sf0.01,
-  - times every oracle at sf0.01 and records the per-query max + the
-    pinned bound (ORACLE_BUDGET_SEC); any oracle over the bound, any
-    oracle error, or any compare failure -> exit 1 and the artifact
-    says "tripwire": "FAIL",
-  - writes gate/gate_r{N}.json with the same fields prior rounds used
-    plus `oracle_per_query_max_sec`, `oracle_budget_sec`,
-    `oracle_slowest` (top 5), and `tripwire`.
+  - runs the DuckDB compare (tools/compare.py's exact code path) on
+    every leg,
+  - times every oracle of one leg (tools/oracle_bench.py's timer) and
+    records the per-query max + the pinned bound (ORACLE_BUDGET_SEC);
+    any oracle over the bound, any oracle error, or any compare
+    failure -> exit 1 and the artifact says "tripwire": "FAIL",
+  - writes <gate_json> with per-leg pass/fail counts plus
+    `oracle_per_query_max_sec`, `oracle_budget_sec`, `oracle_slowest`
+    (top 5), and `tripwire`.
 
-Usage (legacy two-leg form, kept so recorded r13-r15 scripts still
-re-run from HEAD):
-  python3 tools/gate.py <round> <out_sf0001> <out_sf001> <gate_json> \
-      [--suite-tests N] [--note TEXT] [--sf0001-dir D] [--sf001-dir D]
-
-General form (r17+; any legs, e.g. the full-sf0.1 standing gate):
+Usage:
   python3 tools/gate.py <round> <gate_json> \
-      --leg sf0.01=/root/testdata/sf0.01=/tmp/out1 \
-      --leg sf0.1=/root/testdata/sf0.1=/tmp/out2 \
-      --oracle-leg sf0.1 [--suite-tests N] [--note TEXT]
+      --leg sf0.001=/root/testdata/sf0.001=/tmp/out1 \
+      --leg sf0.01=/root/testdata/sf0.01=/tmp/out2 \
+      [--oracle-leg sf0.01] [--suite-tests N] [--note TEXT]
 
 where out dirs are graft.Verify outputs (one parquet dir per query +
 oracle_sql.json); --oracle-leg picks which leg's oracles are timed
 against the budget (default: the last leg).
 """
-import sys, json, time, os, argparse
-
-import duckdb
+import sys, json, argparse
 
 import compare
+from oracle_bench import time_oracles
 
 ORACLE_BUDGET_SEC = 30.0
-
-TABLES = ("region nation customer supplier part orders lineitem "
-          "events documents embeddings").split()
-
-
-def time_oracles(sf_dir, oracle_json):
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-    oracles = json.load(open(oracle_json))
-    timings, errors = {}, []
-    t_all = time.time()
-    for name in sorted(oracles):
-        t0 = time.time()
-        try:
-            con.execute(oracles[name]).fetchall()
-        except Exception as e:
-            errors.append(name)
-            print(f"ORACLE ERROR {name}: {e}")
-            timings[name] = None
-            continue
-        timings[name] = round(time.time() - t0, 3)
-    return timings, errors, round(time.time() - t_all, 1)
 
 
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("round", type=int)
-    ap.add_argument("positional", nargs="*")
-    ap.add_argument("--leg", action="append", default=[],
+    ap.add_argument("gate_json")
+    ap.add_argument("--leg", action="append", required=True,
                     help="label=sf_dir=verify_out_dir (repeatable)")
     ap.add_argument("--oracle-leg", default=None,
                     help="label of the leg whose oracles are timed "
                          "(default: last --leg)")
     ap.add_argument("--suite-tests", type=int, default=None)
     ap.add_argument("--note", default="")
-    ap.add_argument("--sf0001-dir", default="/root/testdata/sf0.001")
-    ap.add_argument("--sf001-dir", default="/root/testdata/sf0.01")
     args = ap.parse_args()
 
-    if args.leg:
-        if len(args.positional) != 1:
-            ap.error("--leg form takes exactly: <round> <gate_json> --leg ...")
-        gate_json = args.positional[0]
-        leg_specs = []
-        for spec in args.leg:
-            label, sf_dir, out_dir = spec.split("=")
-            leg_specs.append((label, sf_dir, out_dir))
-        oracle_label = args.oracle_leg or leg_specs[-1][0]
-        oracle_sf, oracle_out = next((s, o) for l, s, o in leg_specs
-                                     if l == oracle_label)
-    else:
-        if len(args.positional) != 3:
-            ap.error("legacy form takes: <round> <out_sf0001> <out_sf001> <gate_json>")
-        out_sf0001, out_sf001, gate_json = args.positional
-        leg_specs = [("sf0.001", args.sf0001_dir, out_sf0001),
-                     ("sf0.01", args.sf001_dir, out_sf001)]
-        oracle_label, oracle_sf, oracle_out = "sf0.01", args.sf001_dir, out_sf001
+    leg_specs = [tuple(spec.split("=")) for spec in args.leg]
+    oracle_label = args.oracle_leg or leg_specs[-1][0]
+    oracle_sf, oracle_out = next((s, o) for l, s, o in leg_specs
+                                 if l == oracle_label)
 
     legs = {}
     for label, sf_dir, out_dir in leg_specs:
@@ -111,7 +62,7 @@ def main():
 
     print(f"== oracle wall @ {oracle_label} ==")
     timings, errors, total = time_oracles(
-        oracle_sf, f"{oracle_out}/oracle_sql.json")
+        oracle_sf, json.load(open(f"{oracle_out}/oracle_sql.json")))
     valid = {k: v for k, v in timings.items() if v is not None}
     worst = max(valid.values()) if valid else None
     slowest = sorted(valid.items(), key=lambda kv: -kv[1])[:5]
@@ -125,7 +76,7 @@ def main():
         **({"suite_tests": args.suite_tests} if args.suite_tests else {}),
         **legs,
         "oracle_leg": oracle_label,
-        "oracle_wall_sf01_sec": total,
+        "oracle_wall_sf01_sec": round(total, 1),
         "oracle_per_query_max_sec": worst,
         "oracle_budget_sec": ORACLE_BUDGET_SEC,
         "oracle_slowest": [{"query": k, "sec": v} for k, v in slowest],
@@ -134,7 +85,7 @@ def main():
         "tripwire": "PASS" if ok else "FAIL",
         **({"note": args.note} if args.note else {}),
     }
-    with open(gate_json, "w") as f:
+    with open(args.gate_json, "w") as f:
         json.dump(artifact, f, indent=1)
     print(json.dumps({k: artifact[k] for k in
                       ("round", "queries", "oracle_wall_sf01_sec",

@@ -15,12 +15,29 @@ Usage:
 Exit 1 (loudly) if any single oracle exceeds --budget seconds (default 30)
 or errors. --warn (default 3) flags slow-but-passing oracles for review.
 """
-import sys, json, time, os, argparse
+import sys, json, time, argparse
 
-import duckdb
+import compare
 
-TABLES = ("region nation customer supplier part orders lineitem "
-          "events documents embeddings").split()
+
+def time_oracles(sf_dir, oracles):
+    """Run every oracle SQL once in DuckDB over sf_dir's tables.
+    Returns ({name: seconds, or None on error}, [errored names],
+    total wall seconds). tools/gate.py times its oracle leg with this."""
+    con = compare.connect(sf_dir)
+    timings, errors = {}, []
+    t_all = time.time()
+    for name in sorted(oracles):
+        t0 = time.time()
+        try:
+            con.execute(oracles[name]).fetchall()
+        except Exception as e:
+            errors.append(name)
+            print(f"ORACLE ERROR {name}: {e}")
+            timings[name] = None
+            continue
+        timings[name] = round(time.time() - t0, 3)
+    return timings, errors, time.time() - t_all
 
 
 def main():
@@ -34,35 +51,15 @@ def main():
     ap.add_argument("--json", default=None, help="write per-oracle timings here")
     args = ap.parse_args()
 
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{args.sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-
     oracles = json.load(open(args.oracle_json))
-    timings, over, warned, errors = {}, [], [], []
-    t_all = time.time()
-    for name in sorted(oracles):
-        t0 = time.time()
-        try:
-            con.execute(oracles[name]).fetchall()
-        except Exception as e:
-            errors.append(name)
-            print(f"ERROR {name}: {e}")
-            timings[name] = None
-            continue
-        dt = time.time() - t0
-        timings[name] = round(dt, 3)
-        if dt > args.budget:
-            over.append(name)
-            print(f"OVER-BUDGET {name}: {dt:.1f}s > {args.budget}s")
-        elif dt > args.warn:
-            warned.append(name)
-    total = time.time() - t_all
+    timings, errors, total = time_oracles(args.sf_dir, oracles)
+    valid = {k: v for k, v in timings.items() if v is not None}
+    over = sorted(k for k, v in valid.items() if v > args.budget)
+    warned = sorted(k for k, v in valid.items() if args.warn < v <= args.budget)
+    for k in over:
+        print(f"OVER-BUDGET {k}: {valid[k]:.1f}s > {args.budget}s")
 
-    ranked = sorted(((v, k) for k, v in timings.items() if v is not None),
-                    reverse=True)
+    ranked = sorted(((v, k) for k, v in valid.items()), reverse=True)
     print(f"\n== oracle timings (top 15 of {len(oracles)}) @ {args.sf_dir} ==")
     for v, k in ranked[:15]:
         flag = " <-- OVER" if k in over else (" <-- warn" if k in warned else "")

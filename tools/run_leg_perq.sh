@@ -7,17 +7,17 @@
 # disk blowout, and its accumulated shuffle files squat the disk the
 # next query needs. One JVM per query = crash isolation, disk returned
 # between queries (BlockManager dirs clean on exit), and every query
-# cold-memo — the same attribution evict-mode gives, minus the shared
-# JIT warmup (run 1 absorbs it; repeat-min reports run 2). Timed
+# builds only its own memos (in graft.Bench's untimed warm pass). Timed
 # windows never include JVM start (graft.Bench times query execution
-# only). Legs compared against each other must ALL use this runner.
+# only). Legs compared against each other must ALL use this runner;
+# tools/run_decade.sh drives it for a whole decade run.
 #
 # Usage: run_leg_perq.sh <sfdir> <out.json> <queries-csv> <heap> [level] [memodir]
 # With level PARQUET, [memodir] roots the materialized-memo store that
 # every per-query JVM in the leg shares (the Kafka-DWD-topic analog):
 # the first toucher builds+writes, the rest scan columnar.
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 SFDIR="$1"; OUT="$2"; QUERIES="$3"; MEM="$4"; LEVEL="${5:-DISK_ONLY}"
 MEMODIR="${6:-}"
 # Decade legs are scale-sized by definition, so this runner defaults
