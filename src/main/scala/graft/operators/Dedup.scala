@@ -131,7 +131,7 @@ object Dedup {
     * the pairs in order (components, edit distance, cross-source,
     * split leakage, the LSH audit), so the named query's range sort
     * and its sampling job stay out of the shared build. */
-  private def verifiedPairs(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def verifiedPairs(spark: SparkSession, dir: String): DataFrame =
     Memo(spark, dir, "dedup_ngram_pairs")(
       scoreJaccard(minedPairSizes(shingled(spark, dir), HotShingleDfCap), 0.015))
 
@@ -191,7 +191,7 @@ object Dedup {
     * pass (TextAnalysis.bestRep) and the dedup summary — via
     * [[Memo]] (checkpoint, r18): the frame IS the named
     * `dedup_components` query's output, so the named query computes its
-    * own propagation per action (and is measured on it) while the
+    * own components per action (and is measured on it) while the
     * downstream consumers read one materialization. */
   private[operators] def componentsShared(spark: SparkSession, dir: String): DataFrame =
     Memo(spark, dir, "dedup.components")(dedupComponents(spark, dir))
@@ -201,18 +201,17 @@ object Dedup {
     * maps to the min doc_id of its component. Real pipelines collapse
     * duplicate GROUPS, not 1-hop neighbor pairs: A≈B≈C must land in
     * one group even when A and C never co-bucket ([[minhashLsh]]'s rep
-    * map is the 1-hop approximation of this closure). The loop is
-    * [[componentLabels]]; isolated docs (the overwhelming majority of
-    * a real corpus) never enter it — they are their own rep by
+    * map is the 1-hop approximation of this closure). The labels come
+    * from [[componentLabels]]; isolated docs (the overwhelming majority
+    * of a real corpus) never enter it — they are their own rep by
     * definition and are glued back with one left join at the end, so
-    * loop cost scales with the near-dup graph, not the corpus. */
-  def dedupComponents(spark: SparkSession, dir: String, maxIter: Int = 30): DataFrame = {
-    val labels = componentLabels(verifiedPairs(spark, dir), maxIter)
+    * the cost scales with the near-dup graph, not the corpus. */
+  def dedupComponents(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir).select(col("doc_id"))
-      .join(labels.withColumnRenamed("rep_doc_id", "rep"), Seq("doc_id"), "left")
+      .join(componentLabels(verifiedPairs(spark, dir)).withColumnRenamed("rep_doc_id", "rep"),
+        Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("rep"), col("doc_id")).as("rep_doc_id"))
       .orderBy(col("doc_id"))
-  }
 
   /** Vertex cap of one task's seed union-find in [[componentLabels]]:
     * a task that has seen this many distinct vertices emits their
@@ -223,42 +222,49 @@ object Dedup {
 
   /** Component labels of an arbitrary (doc_a, doc_b) pair frame:
     * (doc_id, rep_doc_id) for every vertex of an edge, rep = the min id
-    * of its component.
+    * of its component. The one components core: `dedup_components`,
+    * `dedup_components_star` and `mm_dup_components` all run it.
     *
-    * Seed, then propagate. A union-find inside each partition of
-    * `pairs` labels every vertex with the min of its LOCAL set (the
-    * components of that partition's edges); one groupBy(doc_id) keeps
-    * the min and the max of each vertex's seed labels. Every seed label
-    * is a vertex of the same true component and is ≤ the vertex, so
-    * min-label propagation from the seed ends at the component minimum,
-    * exactly as from the identity labeling. If no vertex got two
-    * different seed labels, the seed IS the fixpoint and no round runs:
-    * local sets that share a vertex then carry one label, every edge
-    * lies inside some local set, and the set holding the component
-    * minimum is labeled with it.
+    *  1. Seed. A union-find inside each partition of `pairs` labels
+    *     every vertex with the min of its LOCAL set (the components of
+    *     that partition's edges). One groupBy(doc_id) gives each vertex
+    *     its minimum seed label `m` and its set of seed labels; every
+    *     other label `s` in that set is a conflict edge (s, m).
+    *  2. No conflict edges: the seed IS the answer. Local sets that
+    *     share a vertex then carry one label, every edge lies inside
+    *     some local set, and the set holding the component minimum is
+    *     labeled with it. One job; the fixtures take this path.
+    *  3. Otherwise, large-star/small-star contraction (Kiveris et al.,
+    *     "Connected Components in MapReduce and Beyond", SoCC'14) on
+    *     the conflict graph. Its vertices are seed labels and it has at
+    *     most |seed rows| − |vertices| edges. Two labels are connected
+    *     iff their local sets are chained through shared vertices, so
+    *     its components are the true components, and each one's
+    *     minimum is a vertex of it: the seed label of its own local set.
+    *  4. Relabel: one join maps `m` to its component minimum.
     *
     * Scale notes:
-    *  - Rounds are bounded by the diameter of the partition-contracted
-    *    graph (each local set collapsed to one vertex), not of the pair
-    *    graph: zero when a component's edges share a partition, as on
-    *    the fixture, and never more than plain propagation needs. Each
-    *    round is one shuffle (edges ⋈ labels, groupBy min).
-    *  - The seed costs no extra shuffle: its groupBy replaces the
-    *    identity labeling's distinct. Its conflict count and every
-    *    round's changed-row count are read by the same job that
-    *    materializes the labels' lazy `localCheckpoint`
-    *    ([[checkpointCounted]]). Without truncating lineage the plan
-    *    doubles per round and the driver OOMs building it (at cluster
-    *    scale use reliable `checkpoint` so a lost executor can't drop a
-    *    round). Labels never leave executors.
+    *  - Star phases are O(log n) in the conflict graph, which is the
+    *    pair graph with each local set collapsed to one vertex: zero
+    *    phases when every component's edges share a partition.
+    *  - The seed conflict count and each phase's edge count are read
+    *    by the same job that materializes the frame's lazy
+    *    `localCheckpoint` ([[checkpointCounted]]). Without truncating
+    *    lineage the plan doubles per phase and the driver OOMs building
+    *    it (at cluster scale use reliable `checkpoint` so a lost
+    *    executor can't drop a phase). Labels never leave executors.
     *  - `seedCap` bounds the union-find per task ([[SeedCap]], 2^20
     *    vertices, by default); a partial contraction is still a valid
-    *    seed, it only leaves more conflicts for the rounds.
-    *  - `pairs` is read twice when rounds run (seed, then the symmetric
-    *    edge checkpoint), so pass a materialized frame.
-    *  - Long chains split across partitions still cost a round per hop;
-    *    [[dedupComponentsStar]] is the O(log n)-round form. */
-  private[graft] def componentLabels(pairs: DataFrame, maxIter: Int,
+    *    seed, it only leaves more conflict edges for the star phases.
+    *  - `pairs` is read once, by the seed.
+    *
+    * Non-convergence within `maxIter` star phases is an ERROR, not a
+    * stderr note: a truncated closure is indistinguishable from a
+    * converged one in the output schema, so a caller consuming
+    * `rep_doc_id` must never receive one silently (ADVICE r7). The loop
+    * evaluates convergence on its final phase, so a thrown budget
+    * overrun is definitive. */
+  private[graft] def componentLabels(pairs: DataFrame, maxIter: Int = 20,
                                      seedCap: Int = SeedCap): DataFrame = {
     require(seedCap > 0, s"seedCap must be positive, got $seedCap")
     val longPair = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
@@ -271,36 +277,68 @@ object Dedup {
       }(longPair)
       .toDF("doc_id", "seed")
       .groupBy(col("doc_id"))
-      .agg(min(col("seed")).as("rep_doc_id"), max(col("seed")).as("seed_max"))
-    val (seeded, conflicts) = checkpointCounted(seeds, col("rep_doc_id") =!= col("seed_max"))
-    var labels = seeded.select(col("doc_id"), col("rep_doc_id"))
-    var converged = conflicts == 0
-    // built only when a round runs; the first round's join materializes it
-    lazy val edges = {
-      val e = pairs.select(col("doc_a"), col("doc_b"))
-      e.unionByName(e.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-        .localCheckpoint(false)
+      .agg(min(col("seed")).as("rep_doc_id"), collect_set(col("seed")).as("seeds"))
+    val (seeded, conflicted) = checkpointCounted(seeds, size(col("seeds")) > 1)
+    val labels = seeded.select(col("doc_id"), col("rep_doc_id"))
+    if (conflicted == 0) labels
+    else {
+      // star edges are oriented a > b and distinct; the row counts gate
+      // the exact set-equality check below for free
+      var (edges, nEdges) = checkpointCounted(seeded
+        .select(explode(col("seeds")).as("a"), col("rep_doc_id").as("b"))
+        .filter(col("a") =!= col("b")).distinct())
+      var converged = false
+      var i = 0
+      val w = Window.partitionBy(col("a"))
+      while (!converged && i < maxIter) {
+        // Each star phase is ONE partitioned window min instead of the
+        // groupBy+self-join pair (r18, guide §2.4): the window attaches
+        // the neighborhood min to every row inside the single hash(a)
+        // exchange — the join form paid the same exchange plus a
+        // HashAggregate and an SMJ with two sorts per phase. Windows
+        // stream sorted runs (spillable), so a giant-degree hub never
+        // materializes an in-memory neighbor array the way collect_list
+        // would.
+        // large-star: hang every larger neighbor off the neighborhood min
+        val sym = edges.unionByName(edges.select(col("b").as("a"), col("a").as("b")))
+        val ls = sym.withColumn("m", least(min(col("b")).over(w), col("a")))
+          .filter(col("b") > col("a"))
+          .select(col("b").as("a"), col("m").as("b"))
+          .filter(col("a") =!= col("b"))
+        // ls is NOT deduplicated: duplicates ((b, m) reached through
+        // several neighbors) are bounded by Σdeg(b) = 2|E| rows, fold in
+        // the small-star distinct below anyway, and skipping the dedup
+        // removes a full (a, b)-keyed exchange + stage barrier per phase
+        // small-star: same for the not-larger neighbors, smaller-oriented
+        val or = ls.select(greatest(col("a"), col("b")).as("a"), least(col("a"), col("b")).as("b"))
+        val ss = or.withColumn("m", min(col("b")).over(w))
+          // every row votes its b AND its a against the partition min
+          .select(explode(array(col("b"), col("a"))).as("v"), col("m"))
+          .filter(col("v") =!= col("m"))
+          .select(greatest(col("v"), col("m")).as("a"), least(col("v"), col("m")).as("b"))
+          .distinct()
+        val (ssCk, nSs) = checkpointCounted(ss)
+        // both frames are distinct by construction, so they are equal as
+        // sets iff their counts match AND every (a, b) of their union
+        // appears exactly twice (one grouped count — still EXACT, never
+        // probabilistic). Unequal counts PROVE inequality, so contracting
+        // phases skip the equality job entirely.
+        if (nSs == nEdges)
+          converged = ssCk.unionByName(edges).groupBy(col("a"), col("b"))
+            .agg(count(lit(1)).as("ct")).filter(col("ct") =!= 2).isEmpty
+        edges = ssCk
+        nEdges = nSs
+        i += 1
+      }
+      if (!converged) throw new IllegalStateException(
+        s"[graft] componentLabels: no fixpoint within $maxIter star phases — the labels " +
+          "would be a partial (wrong) closure; raise maxIter")
+      // a converged star set has one row per non-minimum label: a -> b,
+      // its component minimum; minima carry no row
+      labels.join(edges.select(col("a").as("rep_doc_id"), col("b").as("root")),
+          Seq("rep_doc_id"), "left")
+        .select(col("doc_id"), coalesce(col("root"), col("rep_doc_id")).as("rep_doc_id"))
     }
-    var i = 0
-    while (!converged && i < maxIter) {
-      val nbrMin = edges
-        .join(labels.select(col("doc_id").as("doc_b"), col("rep_doc_id").as("nrep")), "doc_b")
-        .groupBy(col("doc_a")).agg(min(col("nrep")).as("nmin"))
-        .withColumnRenamed("doc_a", "doc_id")
-      // old and new label side by side in ONE join: the checkpointing
-      // job also counts the changed rows
-      val (updated, n) = checkpointCounted(
-        labels.join(nbrMin, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("rep_doc_id").as("old_rep"),
-            least(col("rep_doc_id"), coalesce(col("nmin"), col("rep_doc_id"))).as("rep_doc_id")),
-        col("rep_doc_id") =!= col("old_rep"))
-      labels = updated.select(col("doc_id"), col("rep_doc_id"))
-      converged = n == 0
-      i += 1
-    }
-    requireConverged(converged, "dedupComponents", maxIter,
-      "use dedupComponentsStar (O(log n) rounds) or raise maxIter")
-    labels
   }
 
   /** One task's seed union-find over Long vertex ids. A parent link
@@ -337,108 +375,11 @@ object Dedup {
     * matching `where`, from ONE job: the count's scan of the lazy
     * checkpoint is what materializes it (an eager `localCheckpoint`
     * runs its own count internally and throws the value away), so a
-    * loop can test convergence every round at no extra driver action. */
+    * loop can test convergence every phase at no extra driver action. */
   private def checkpointCounted(df: DataFrame, where: Column = lit(true)): (DataFrame, Long) = {
     val ck = df.localCheckpoint(false)
     (ck, ck.filter(where).count())
   }
-
-  /** [[dedupComponents]] via alternating large-star/small-star
-    * contraction (Kiveris et al., "Connected Components in MapReduce
-    * and Beyond", SoCC'14) — the O(log n)-round form for dup graphs
-    * with long chains, where direct min-label propagation's
-    * diameter-many rounds would dominate. Same output contract (every
-    * doc → min doc_id of its component) and the same recursive-CTE
-    * oracle; the fixture equality plus a ScalaCheck property against
-    * driver-side union-find on random graphs pin the rewrite.
-    *
-    * Round shapes: large-star hangs every larger neighbor off the
-    * neighborhood minimum (one groupBy + one join per round);
-    * small-star does the same for the not-larger neighbors on the
-    * smaller-oriented edge list. Both preserve connectivity and strictly
-    * contract toward component-min stars; each round is checkpointed
-    * (same lineage discipline as the direct loop). */
-  def dedupComponentsStar(spark: SparkSession, dir: String, maxIter: Int = 20): DataFrame = {
-    val pairs = verifiedPairs(spark, dir).select(col("doc_a"), col("doc_b"))
-    // min-reduce keeps the one-row-per-doc contract; on a converged
-    // star set (starLabels throws otherwise) it is a no-op guard
-    val labels = starLabels(pairs, maxIter)
-      .groupBy(col("a").as("doc_id")).agg(min(col("b")).as("rep"))
-    Tables.documents(spark, dir).select(col("doc_id"))
-      .join(labels, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("rep"), col("doc_id")).as("rep_doc_id"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** The alternating-star contraction over an arbitrary
-    * (doc_a, doc_b) pair frame: returns the converged star edge set
-    * (a = member, b = its component's min id; component minima carry
-    * no row — they are their own representative). */
-  private[graft] def starLabels(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    // the row counts gate the exact set-equality check below for free
-    var (edges, nEdges) = checkpointCounted(pairs
-      .select(greatest(col("doc_a"), col("doc_b")).as("a"),
-        least(col("doc_a"), col("doc_b")).as("b"))
-      .filter(col("a") =!= col("b")).distinct())
-    var converged = nEdges == 0
-    var i = 0
-    val w = Window.partitionBy(col("a"))
-    while (!converged && i < maxIter) {
-      // Each star phase is ONE partitioned window min instead of the
-      // groupBy+self-join pair (r18, guide §2.4): the window attaches
-      // the neighborhood min to every row inside the single hash(a)
-      // exchange — the join form paid the same exchange plus a
-      // HashAggregate and an SMJ with two sorts per phase. Windows
-      // stream sorted runs (spillable), so a giant-degree hub (the
-      // LSH star-link anchor) never materializes an in-memory
-      // neighbor array the way collect_list would.
-      // large-star: hang every larger neighbor off the neighborhood min
-      val sym = edges.unionByName(edges.select(col("b").as("a"), col("a").as("b")))
-      val ls = sym.withColumn("m", least(min(col("b")).over(w), col("a")))
-        .filter(col("b") > col("a"))
-        .select(col("b").as("a"), col("m").as("b"))
-        .filter(col("a") =!= col("b"))
-      // ls is NOT deduplicated: duplicates ((b, m) reached through
-      // several neighbors) are bounded by Σdeg(b) = 2|E| rows, fold in
-      // the small-star distinct below anyway, and skipping the dedup
-      // removes a full (a, b)-keyed exchange + stage barrier per round
-      // small-star: same for the not-larger neighbors, smaller-oriented
-      val or = ls.select(greatest(col("a"), col("b")).as("a"), least(col("a"), col("b")).as("b"))
-      val ss = or.withColumn("m", min(col("b")).over(w))
-        // every row votes its b AND its a against the partition min —
-        // the (a, m) rows the old mins2-union emitted per distinct key
-        // appear here per row and fold in the distinct
-        .select(explode(array(col("b"), col("a"))).as("v"), col("m"))
-        .filter(col("v") =!= col("m"))
-        .select(greatest(col("v"), col("m")).as("a"), least(col("v"), col("m")).as("b"))
-        .distinct()
-      val (ssCk, nSs) = checkpointCounted(ss)
-      // both frames are distinct by construction, so they are equal as
-      // sets iff their counts match AND every (a, b) of their union
-      // appears exactly twice (one grouped count — still EXACT, never
-      // probabilistic). Unequal counts PROVE inequality, so contracting
-      // rounds skip the equality job entirely.
-      if (nSs == nEdges)
-        converged = ssCk.unionByName(edges).groupBy(col("a"), col("b"))
-          .agg(count(lit(1)).as("ct")).filter(col("ct") =!= 2).isEmpty
-      edges = ssCk
-      nEdges = nSs
-      i += 1
-    }
-    requireConverged(converged, "starLabels", maxIter, "raise maxIter")
-    edges
-  }
-
-  /** Non-convergence is an ERROR, not a stderr note: a truncated
-    * closure is indistinguishable from a converged one in the output
-    * schema, so a caller consuming `rep_doc_id` must never receive one
-    * silently (ADVICE r7). The loops above always evaluate convergence
-    * on their final round, so a thrown budget overrun is definitive. */
-  private def requireConverged(converged: Boolean, what: String,
-                               maxIter: Int, hint: String): Unit =
-    if (!converged) throw new IllegalStateException(
-      s"[graft] $what: no fixpoint within $maxIter rounds — the labels would be " +
-        s"a partial (wrong) closure; $hint")
 
   /** Exact-substring overlap pairs: documents sharing at least one
     * verbatim run of [[SubstringK]] consecutive tokens (the windowed-
@@ -1120,7 +1061,8 @@ object Dedup {
     "dedup_entity_match" -> ((s, d) => entityMatch(s, d)),
     "dedup_split_leakage" -> ((s, d) => splitLeakage(s, d)),
     "dedup_components" -> ((s, d) => dedupComponents(s, d)),
-    "dedup_components_star" -> ((s, d) => dedupComponentsStar(s, d)),
+    // alias: the name stays in the query surface, oracle map and decade artifacts
+    "dedup_components_star" -> ((s, d) => dedupComponents(s, d)),
     "dedup_substring" -> ((s, d) => substringPairs(s, d)),
     "dedup_cross_source" -> ((s, d) => crossSourceDups(s, d)),
     "dedup_source_signatures" -> ((s, d) => sourceSignatures(s, d)),
@@ -1186,10 +1128,8 @@ object Dedup {
       |  SELECT source, h_idx, CAST(MIN(pm) AS BIGINT) AS h_min FROM srcperm GROUP BY source, h_idx
       |)""".stripMargin
 
-  /** Recursive min-label reachability over the verified pair graph —
-    * shared by both connected-components queries (direct propagation
-    * and star contraction), which must agree exactly. */
-  /** The transitive-closure CTE chain ending in `comp(doc_id,
+  /** Recursive min-label reachability over the verified pair graph:
+    * the transitive-closure CTE chain ending in `comp(doc_id,
     * rep_doc_id)` — shared by the components oracles and the
     * quality-aware best-representative oracle (TextAnalysis). */
   private[operators] val componentsOracleCtes: String =
@@ -1502,7 +1442,6 @@ object Dedup {
         |  CAST(SUM(c_size) AS BIGINT) AS n_docs,
         |  CAST(SUM(c_size) - COUNT(*) AS BIGINT) AS n_removable
         |FROM csizes GROUP BY 1 ORDER BY c_size""".stripMargin,
-    // the star-contraction rewrite must produce the IDENTICAL closure
     "dedup_components_star" -> componentsOracleSql,
     // SimHash is FNV-over-tokens + bit votes — fully reproducible in
     // DuckDB (DuckSql.simhashCtes runs the same wrapping arithmetic in

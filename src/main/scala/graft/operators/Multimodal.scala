@@ -366,26 +366,25 @@ object Multimodal {
   }
 
   /** Transitive perceptual-dup groups: connected components of the
-    * banded-hamming pair graph via [[Dedup.starLabels]] (the same
-    * O(log n)-round alternating-star contraction the text dedup tier
-    * uses — one machinery, two modalities). Every hashed asset gets a
-    * row; isolated assets are their own representative. */
+    * banded-hamming pair graph via [[Dedup.componentLabels]] (the same
+    * components core the text dedup tier uses — one machinery, two
+    * modalities). Every hashed asset gets a row; isolated assets are
+    * their own representative. */
   def phashComponents(spark: SparkSession, dir: String): DataFrame =
-    // the named query runs its own contraction per action (r18);
+    // the named query runs its own components per action (r18);
     // the decision table reads the checkpoint share below
     phashComponentsBuild(spark, dir).orderBy(col("doc_id"))
 
   /** Shared closure for the decision table — [[Memo]]
     * (checkpoint, r18): the frame IS the named `mm_dup_components`
-    * output; unshared, the star-contraction rounds ran once per
-    * consumer (measured 2× the pipeline cost in the decision query). */
+    * output; unshared, the components core ran once per consumer
+    * (measured 2× the pipeline cost in the decision query). */
   private def memoPhashComponents(spark: SparkSession, dir: String): DataFrame =
     Memo(spark, dir, "mm_dup_components")(phashComponentsBuild(spark, dir))
 
   private def phashComponentsBuild(spark: SparkSession, dir: String): DataFrame = {
     val h = memoBlockHashes(spark, dir)
-    val labels = Dedup.starLabels(phashPairsOn(h).select(col("doc_a"), col("doc_b")))
-      .groupBy(col("a").as("doc_id")).agg(min(col("b")).as("rep"))
+    val labels = Dedup.componentLabels(phashPairsOn(h)).withColumnRenamed("rep_doc_id", "rep")
     h.select(col("doc_id")).join(labels, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("rep"), col("doc_id")).as("rep_asset_id"))
   }
@@ -643,7 +642,7 @@ object Multimodal {
          |SELECT doc_a, doc_b, hamming FROM mmpairs
          |ORDER BY doc_a, doc_b""".stripMargin,
     // the same pair CTEs feeding a recursive min-label closure over
-    // the hashed-asset node set (mirrors Dedup.starLabels' contract)
+    // the hashed-asset node set: every asset -> min id of its component
     "mm_dup_components" ->
       s"""WITH RECURSIVE ${blockHashCtes()},
          |$phashPairCtes,

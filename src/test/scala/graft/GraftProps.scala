@@ -340,7 +340,7 @@ object GraftProps extends Properties("graft") {
       whole && (truncated == 0L || cut >= 2)
     }
 
-  // ------------------------------------------------ star contraction vs union-find
+  // ----------------------------------------- components core vs union-find
 
   private val genEdges: Gen[List[(Long, Long)]] = for {
     n <- Gen.choose(2, 40)
@@ -366,31 +366,18 @@ object GraftProps extends Properties("graft") {
   }
 
   // edges spread over 1-4 partitions with a 1-3 vertex seed cap: local
-  // union-find sets are fragments, so seeds conflict and rounds run
+  // union-find sets are fragments, so seeds conflict and the star
+  // phases run on the conflict graph
   property("seeded component labels == union-find on repartitioned random graphs") =
     forAll(genEdges, Gen.choose(1, 4), Gen.choose(1, 3)) { (es, parts, cap) =>
       import spark.implicits._
       val labels = graft.operators.Dedup.componentLabels(
-          es.toDF("doc_a", "doc_b").repartition(parts), maxIter = 64, seedCap = cap)
+          es.toDF("doc_a", "doc_b").repartition(parts), seedCap = cap)
         .as[(Long, Long)].collect()
       val root = unionFindRoots(es)
       val verts = es.flatMap { case (a, b) => Seq(a, b) }.distinct
       labels.map(_._1).sorted.sameElements(verts.sorted) &&
         labels.forall { case (v, r) => r == root(v) }
-    }
-
-  property("star-contraction components == union-find on random graphs") =
-    forAll(genEdges) { es =>
-      import spark.implicits._
-      val edges = es.filter { case (a, b) => a != b }
-      edges.isEmpty || {
-        val labels = graft.operators.Dedup.starLabels(
-            edges.toDF("doc_a", "doc_b"))
-          .as[(Long, Long)].collect().toMap
-        val root = unionFindRoots(edges)
-        val verts = edges.flatMap { case (a, b) => Seq(a, b) }.distinct
-        verts.forall(v => labels.getOrElse(v, v) == root(v))
-      }
     }
 
   // --------------------------------------- two-level rank/prefix ≡ naive

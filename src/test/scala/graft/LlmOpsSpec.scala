@@ -664,28 +664,29 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("non-convergence within maxIter throws instead of returning a truncated closure") {
     import spark.implicits._
-    // a 6-node chain cannot stabilize in one star round (the check
-    // compares the round's output against its input edges), and the
-    // loop must REFUSE to return the partial labels (ADVICE r7: a
-    // truncated closure is indistinguishable from a converged one in
-    // the output schema)
-    val chain = (0L until 6L).sliding(2).map(s => (s.head, s.last)).toSeq
+    // seedCap = 1 gives every edge its own seed set, so a 6-node chain
+    // leaves a 5-label conflict chain that one star phase cannot
+    // stabilize (the check compares the phase's output against its
+    // input edges), and the core must REFUSE to return the partial
+    // labels (ADVICE r7: a truncated closure is indistinguishable from
+    // a converged one in the output schema)
+    val chain = (0L until 6L).sliding(2).map(s => (s.head, s.last)).toSeq.toDF("doc_a", "doc_b")
     val e = intercept[IllegalStateException] {
-      Dedup.starLabels(chain.toDF("doc_a", "doc_b"), maxIter = 1).collect()
+      Dedup.componentLabels(chain, maxIter = 1, seedCap = 1)
     }
     assert(e.getMessage.contains("no fixpoint"))
     // the same graph under the default budget converges to the min label
-    val ok = Dedup.starLabels(chain.toDF("doc_a", "doc_b"))
-      .as[(Long, Long)].collect()
-    assert(ok.nonEmpty && ok.forall(_._2 == 0L))
+    val ok = Dedup.componentLabels(chain, seedCap = 1).as[(Long, Long)].collect()
+    assert(ok.map(_._1).sorted.sameElements(0L until 6L) && ok.forall(_._2 == 0L))
   }
 
   test("seeded components: a chain split round-robin over partitions needs rounds; one partition needs none") {
     import spark.implicits._
     val n = 12
     // partition p holds the edges (i, i+1) with i % 4 == p: no two edges
-    // of a partition touch, so every seed set is one edge and each inner
-    // vertex gets two seed labels
+    // of a partition touch, so every seed set is one edge, each inner
+    // vertex gets two seed labels, and the conflict graph is a chain
+    // that needs several star phases
     val spread = spark.sparkContext.parallelize(0 until 4, 4)
       .flatMap(p => (p until n - 1 by 4).map(i => (i.toLong, i + 1L)))
       .toDF("doc_a", "doc_b")
@@ -693,13 +694,22 @@ class LlmOpsSpec extends AnyFunSuite {
       Dedup.componentLabels(spread, maxIter = 1)
     }
     assert(e.getMessage.contains("no fixpoint"))
-    val labels = Dedup.componentLabels(spread, maxIter = 30).as[(Long, Long)].collect()
+    val labels = Dedup.componentLabels(spread).as[(Long, Long)].collect()
     assert(labels.map(_._1).sorted.sameElements(0L until n.toLong))
     assert(labels.forall(_._2 == 0L))
-    // the same chain in one partition: the seed is the fixpoint, zero rounds
+    // the same chain in one partition: the seed is the fixpoint, zero phases
     val whole = Dedup.componentLabels(spread.coalesce(1), maxIter = 0)
       .as[(Long, Long)].collect()
     assert(whole.length == n && whole.forall(_._2 == 0L))
+  }
+
+  test("sf0.001 verified pairs: the seed is the fixpoint, zero star phases") {
+    import spark.implicits._
+    // maxIter = 0 allows no star phase, so a single seed conflict throws
+    val labels = Dedup.componentLabels(Dedup.verifiedPairs(spark, sf), maxIter = 0)
+      .as[(Long, Long)].collect()
+    val want = Dedup.dedupComponents(spark, sf).as[(Long, Long)].collect().toMap
+    assert(labels.nonEmpty && labels.forall { case (d, r) => want(d) == r })
   }
 
   test("quality scoring + filter stream ≡ batch (online curation gate)") {
@@ -1017,11 +1027,10 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(pairs.forall(p => p._1 == 1L && p._3 == 0L),
       "every star edge anchors at the bucket min with hamming 0")
     // transitive collapse is preserved through the star edges
-    val labels = Dedup.starLabels(
-      Multimodal.phashPairsOn(h).select($"doc_a", $"doc_b"))
+    val labels = Dedup.componentLabels(Multimodal.phashPairsOn(h))
       .as[(Long, Long)].collect().toMap
-    assert((2L to 200L).forall(v => labels(v) == 1L), "family must collapse to its min")
-    assert(!labels.contains(500L), "the disjoint asset stays isolated")
+    assert((1L to 200L).forall(v => labels(v) == 1L), "family must collapse to its min")
+    assert(!labels.contains(500L), "the disjoint asset has no edge, so no label row")
   }
 
   test("thumbnail plan geometry and media-decision verdict recount") {

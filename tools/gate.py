@@ -76,7 +76,7 @@ def main():
         **({"suite_tests": args.suite_tests} if args.suite_tests else {}),
         **legs,
         "oracle_leg": oracle_label,
-        "oracle_wall_sf01_sec": round(total, 1),
+        "oracle_wall_sec": round(total, 1),
         "oracle_per_query_max_sec": worst,
         "oracle_budget_sec": ORACLE_BUDGET_SEC,
         "oracle_slowest": [{"query": k, "sec": v} for k, v in slowest],
@@ -88,7 +88,7 @@ def main():
     with open(args.gate_json, "w") as f:
         json.dump(artifact, f, indent=1)
     print(json.dumps({k: artifact[k] for k in
-                      ("round", "queries", "oracle_wall_sf01_sec",
+                      ("round", "queries", "oracle_wall_sec",
                        "oracle_per_query_max_sec", "tripwire")}, indent=1))
     if not ok:
         print("\nGATE TRIPWIRE FAIL: compare failures, oracle errors, or an "

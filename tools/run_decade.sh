@@ -20,11 +20,11 @@
 # 8 ways unless SPARK_GRAFT_ENVELOPE_SALTK is set; the AQE knobs default
 # to the wide decade profile in run_leg_perq.sh.
 #
-# Star contraction across four decades (sf0.1 -> sf100eq):
-#   tools/run_decade.sh /tmp/star \
-#     dedup_components_star,dedup_components,dedup_minhash_lsh,dedup_triangles \
-#     sf0.1=/root/testdata/sf0.1=32g sf1eq=/tmp/sf1eq=48g \
-#     sf10eq=/tmp/sf10eq=96g sf100eq=/tmp/sf100eq=96g
+# The three components queries across one decade on a 4-core, 15 GB
+# host (the gate/components_*.json artifacts):
+#   SPARK_GRAFT_CPUS=4 tools/run_decade.sh gate/components \
+#     dedup_components,dedup_components_star,mm_dup_components \
+#     sf0.1=<testdata>/sf0.1=8g sf1eq=/tmp/sf1eq=8g
 set -e
 [ $# -ge 4 ] || {
   echo "usage: $0 <out-prefix> <queries-csv> <label=dir=heap> <label=dir=heap>..." >&2

@@ -13,6 +13,9 @@
 # tools/run_decade.sh drives it for a whole decade run.
 #
 # Usage: run_leg_perq.sh <sfdir> <out.json> <queries-csv> <heap> [level] [memodir]
+# Each query JVM runs local[$SPARK_GRAFT_CPUS] (default: nproc). A query
+# whose JVM dies before its report leaves its log at <out>_<query>.log;
+# the per-query parts dir is removed on exit.
 # With level PARQUET, [memodir] roots the materialized-memo store that
 # every per-query JVM in the leg shares (the Kafka-DWD-topic analog):
 # the first toucher builds+writes, the rest scan columnar.
@@ -32,24 +35,28 @@ export SPARK_GRAFT_ADVISORY_PARTITION_BYTES="${SPARK_GRAFT_ADVISORY_PARTITION_BY
 CP="${GRAFT_CP:-target/scala-2.13/classes:target/scala-2.13/test-classes}:/opt/spark/jars/*"
 JOPTS=$(grep -oE '"java.base/[a-z.]+"' build.sbt | tr -d '"' |
         sed 's/^/--add-opens /; s/$/=ALL-UNNAMED/' | tr '\n' ' ')
+CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
 PARTS=$(mktemp -d /tmp/legparts.XXXXXX)
+trap 'rm -rf "$PARTS"' EXIT
 IFS=',' read -ra QS <<< "$QUERIES"
 for q in "${QS[@]}"; do
   echo "--- $q $(date -u +%H:%M:%S) (free: $(df --output=avail -h /tmp | tail -1 | tr -d ' '))"
   rm -f target/bench.json
   # shellcheck disable=SC2086
-  env SPARK_GRAFT_SF_DIR="$SFDIR" SPARK_GRAFT_CPUS=32 \
+  env SPARK_GRAFT_SF_DIR="$SFDIR" SPARK_GRAFT_CPUS="$CPUS" \
     SPARK_GRAFT_MEMO_LEVEL="$LEVEL" SPARK_GRAFT_BENCH_ONLY="$q" \
     ${MEMODIR:+SPARK_GRAFT_MEMO_DIR="$MEMODIR"} \
     java $JOPTS -Xmx"$MEM" -Dspark.ui.enabled=false \
       -Dspark.sql.session.timeZone=UTC -cp "$CP" graft.Bench \
       > "$PARTS/$q.log" 2>&1 || true
-  cp target/bench.json "$PARTS/$q.json" 2>/dev/null || \
-    echo "!!! $q: JVM died before the report (log: $PARTS/$q.log)"
+  cp target/bench.json "$PARTS/$q.json" 2>/dev/null || {
+    cp "$PARTS/$q.log" "${OUT%.json}_$q.log"
+    echo "!!! $q: JVM died before the report (log: ${OUT%.json}_$q.log)"
+  }
 done
-python3 - "$OUT" "$PARTS" <<'PY'
+python3 - "$OUT" "$PARTS" "$QUERIES" <<'PY'
 import json, sys, glob, os
-out, parts = sys.argv[1], sys.argv[2]
+out, parts, asked = sys.argv[1], sys.argv[2], sys.argv[3].split(",")
 queries, runs, io, errors, sentinels = {}, {}, {}, [], []
 sf = level = None
 names = set()
@@ -59,6 +66,8 @@ for p in sorted(glob.glob(os.path.join(parts, "*.json"))):
     io.update(d.get("io", {})); errors += d["errors"]
     sentinels.append(d["cpu_vs_wall"]); sf = d["sf"]; level = d.get("memo_level")
     names.update(d["queries"])
+# a query whose JVM died left no part: the leg is not ok
+errors += [f"{q}: JVM died before the report" for q in asked if q not in names]
 total = sum(v for v in queries.values() if v >= 0)
 merged = {"metric": "total", "value": total, "unit": "sec",
           "ok": not errors, "queries": queries, "runs": runs, "io": io,
@@ -69,4 +78,4 @@ json.dump(merged, open(out, "w"))
 print(f"merged {len(names)} queries -> {out}; ok={not errors}; "
       f"total={total:.1f}s; sentinel min={merged['cpu_vs_wall']:.2f}")
 PY
-echo "leg done $(date -u +%H:%M:%S); parts kept in $PARTS"
+echo "leg done $(date -u +%H:%M:%S)"
