@@ -380,6 +380,22 @@ object GraftProps extends Properties("graft") {
         labels.forall { case (v, r) => r == root(v) }
     }
 
+  // seedCap = 1: every seed is one edge, so the star phases contract the
+  // whole edge graph on one partition (the seed joins nothing)
+  property("star-contraction components == union-find on random graphs") =
+    forAll(genEdges) { es =>
+      import spark.implicits._
+      val edges = es.filter { case (a, b) => a != b }
+      edges.isEmpty || {
+        val labels = graft.operators.Dedup.componentLabels(
+            edges.toDF("doc_a", "doc_b").repartition(1), seedCap = 1)
+          .as[(Long, Long)].collect().toMap
+        val root = unionFindRoots(edges)
+        val verts = edges.flatMap { case (a, b) => Seq(a, b) }.distinct
+        labels.keySet == verts.toSet && verts.forall(v => labels(v) == root(v))
+      }
+    }
+
   // --------------------------------------- two-level rank/prefix ≡ naive
 
   private val genRanked = for {
