@@ -71,11 +71,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // same session profile as GraftSession (AQE, skew join, 64 MB
     // broadcast threshold, UTC, ANSI off) so the bench measures the
     // plans the engine actually ships
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val loadStart = osBean.getSystemLoadAverage

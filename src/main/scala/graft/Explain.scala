@@ -13,7 +13,7 @@ object Explain {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val names = if (args.length > 1) Seq(args(1)) else SparkEntry.queries.keys.toSeq.sorted
     // same profile as Bench/Verify so the audited plan IS the shipped plan
-    val spark = GraftSession.builder("local[4]", 4).getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n================ $n ================")

@@ -18,8 +18,12 @@ import org.apache.spark.sql.SparkSession
   * is set, before coalescing, whatever `shufflePartitions` says.
   */
 object GraftSession {
-  def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-              shufflePartitions: Int = 32): SparkSession.Builder = {
+  /** Local task threads: `SPARK_GRAFT_CPUS`, else the host's cores. The
+    * one place the core count is read; every main builds with it. */
+  val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+
+  def builder(master: String = s"local[$cpus]",
+              shufflePartitions: Int = cpus): SparkSession.Builder = {
     val b = SparkSession.builder()
       .master(master)
       .appName("graft")

@@ -40,7 +40,7 @@ object Analytic {
   def rankInGroup(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir)
     val p = Tables.part(spark, dir)
-    val byPart = li.join(broadcast(p), li("l_partkey") === p("p_partkey"))
+    val byPart = li.join(p, li("l_partkey") === p("p_partkey"))
       .groupBy(col("p_brand"), col("p_partkey"))
       .agg(dsum2(col("l_extendedprice")).as("revenue"))
     byPart
@@ -69,7 +69,7 @@ object Analytic {
     import graft.functions.GraftExpressions.topkAgg
     val li = Tables.lineitem(spark, dir)
     val p = Tables.part(spark, dir)
-    val byPart = li.join(broadcast(p), li("l_partkey") === p("p_partkey"))
+    val byPart = li.join(p, li("l_partkey") === p("p_partkey"))
       .groupBy(col("p_brand"), col("p_partkey"))
       .agg(dsum2(col("l_extendedprice")).as("revenue"))
     byPart
@@ -118,7 +118,7 @@ object Analytic {
   def pivotByStatus(spark: SparkSession, dir: String): DataFrame = {
     val o = Tables.orders(spark, dir)
     val c = Tables.customer(spark, dir)
-    o.join(broadcast(c), o("o_custkey") === c("c_custkey"))
+    o.join(c, o("o_custkey") === c("c_custkey"))
       .groupBy(col("c_nationkey").as("nationkey"))
       .pivot("o_orderstatus", Seq("F", "O", "P"))
       .agg(dsum2(col("o_totalprice")))
@@ -206,8 +206,7 @@ object Analytic {
       .filter(col("p1").isNotNull)
       .select(concat_ws(" > ", col("p1"), col("p2"), col("event_type")).as("path"))
       .groupBy(col("path")).agg(count(lit(1)).as("path_ct"))
-    paths
-      .crossJoin(broadcast(paths.agg(sum(col("path_ct")).as("total_ct"))))
+    paths.crossJoin(paths.agg(sum(col("path_ct")).as("total_ct")))
       .withColumn("share",
         col("path_ct").cast(DoubleType) / col("total_ct").cast(DoubleType))
       .orderBy(col("path_ct").desc, col("path")).limit(k)
@@ -250,7 +249,7 @@ object Analytic {
             .rowsBetween(Window.unboundedPreceding, -1)))
       .select(col("b_type"), col("b_bucket"), col("bucket_prev"))
     inner
-      .join(broadcast(bucketMax),
+      .join(bucketMax,
         col("event_type") === col("b_type") && col("bucket") === col("b_bucket"))
       .withColumn("prevmax",
         greatest(coalesce(col("inner_prev"), lit(-1L)), coalesce(col("bucket_prev"), lit(-1L))))
@@ -309,11 +308,11 @@ object Analytic {
   private[graft] def madOutliersOn(hourly: DataFrame): DataFrame = {
     val med = hourly.groupBy(col("event_type").as("m_type"))
       .agg(expr("percentile(ct, 0.5)").as("med"))
-    val dev = hourly.join(broadcast(med), col("event_type") === col("m_type"))
+    val dev = hourly.join(med, col("event_type") === col("m_type"))
       .withColumn("absdev", abs(col("ct").cast(DoubleType) - col("med")))
     val mad = dev.groupBy(col("event_type").as("d_type"))
       .agg(expr("percentile(absdev, 0.5)").as("mad"))
-    dev.join(broadcast(mad), col("event_type") === col("d_type"))
+    dev.join(mad, col("event_type") === col("d_type"))
       .withColumn("rz",
         when(col("mad") === 0.0, lit(0.0))
           .otherwise(lit(0.6745) * (col("ct").cast(DoubleType) - col("med")) / col("mad")))
@@ -384,8 +383,7 @@ object Analytic {
     val nd = col("n_hours").cast(DoubleType)
     val mu = col("sum_ct").cast(DoubleType) / nd
     val sigma = sqrt(col("sum_ct2").cast(DoubleType) / nd - mu * mu)
-    val annotated = hourly
-      .join(broadcast(moments), col("event_type") === col("m_type"))
+    val annotated = hourly.join(moments, col("event_type") === col("m_type"))
       .withColumn("mu", mu).withColumn("sigma", sigma)
       .withColumn("kk", lit(0.5) * col("sigma"))
       .withColumn("hthr", lit(4.0) * col("sigma"))
@@ -429,7 +427,7 @@ object Analytic {
     val nd = col("n_hours").cast(DoubleType)
     val mu = col("sum_ct").cast(DoubleType) / nd
     val sigma = sqrt(col("sum_ct2").cast(DoubleType) / nd - mu * mu)
-    hourly.join(broadcast(moments), col("event_type") === col("m_type"))
+    hourly.join(moments, col("event_type") === col("m_type"))
       .withColumn("mu", mu)
       .withColumn("sigma", sigma)
       // σ = 0 (constant counts, or a type seen in one hour) must be a
@@ -479,7 +477,7 @@ object Analytic {
       .agg(count(lit(1)).as("transition_ct"))
     val totals = pairs.groupBy(col("prev_type").as("t_prev"))
       .agg(sum(col("transition_ct")).as("from_ct"))
-    pairs.join(broadcast(totals), col("prev_type") === col("t_prev"))
+    pairs.join(totals, col("prev_type") === col("t_prev"))
       .withColumn("p", col("transition_ct").cast(DoubleType) /
         col("from_ct").cast(DoubleType))
       .select(col("prev_type"), col("next_type"), col("transition_ct"),
@@ -588,7 +586,7 @@ object Analytic {
     val ev = Tables.events(spark, dir).select(col("event_type"), col("value"))
     val rng = ev.groupBy(col("event_type"))
       .agg(min(col("value")).as("vmin"), max(col("value")).as("vmax"))
-    ev.join(broadcast(rng), Seq("event_type"))
+    ev.join(rng, Seq("event_type"))
       .withColumn("bucket",
         when(col("vmax") === col("vmin"), lit(0L))
           .otherwise(least(

@@ -258,7 +258,7 @@ object Curation {
     // integer floor once max*9 exceeds 2^53 — `div` stays exact
     val cut = docs.agg(max(col("doc_id")).as("mx"))
       .select(expr("mx * 9 div 10").cast(LongType).as("cut"))
-    val withCut = docs.crossJoin(broadcast(cut))
+    val withCut = docs.crossJoin(cut)
     val basePack = Memo(spark, dir, "curation.packIncremental.base")(
       packShardsOn(withCut.filter(col("doc_id") <= col("cut"))
         .select(col("doc_id"), col("text"))))
@@ -277,7 +277,7 @@ object Curation {
   private[graft] def packSplice(basePack: DataFrame, deltaDocs: DataFrame): DataFrame = {
     val baseTok = basePack.agg(coalesce(sum(col("tok_ct")), lit(0L)).as("base_tok"))
     val deltaPack = packShardsOn(deltaDocs)
-      .crossJoin(broadcast(baseTok)) // 1-row shift scalar
+      .crossJoin(baseTok) // 1-row shift scalar
       .select(col("doc_id"), col("tok_ct"),
         (col("tok_offset") + col("base_tok")).as("tok_offset"))
       .withColumn("shard_id", expr(s"tok_offset div $ShardTokens"))
@@ -407,18 +407,10 @@ object Curation {
     * per-bucket windows run in parallel, only one row per
     * (group, bucket) reaches the offset cumsum (≤65 536 rows per
     * group — constant-bounded), and the offsets come back via a join.
-    *
-    * `boundedGroups`: the offsets frame is groups×65 536 rows at
-    * worst, so a forced broadcast is only safe when the CALLER can
-    * bound the group count — pass true where that bound is structural
-    * (epoch shuffle's group key is a literal constant → ≤65 536 rows,
-    * and the hint spares the corpus side its shuffle map stage). With
-    * false (mixture sampling, where sources could number 10⁴+) the
-    * plain equi-join lets AQE broadcast when small and degrade to a
-    * shuffle join instead of a multi-GB forced broadcast build. */
+    * The offsets frame is groups×65 536 rows at worst; the planner
+    * broadcasts it while it fits and shuffles both sides when not. */
   private[graft] def rankAndPrefix(df: DataFrame, grpC: String, keyC: String,
-                                   valC: String,
-                                   boundedGroups: Boolean = false): DataFrame = {
+                                   valC: String): DataFrame = {
     val withB = df.withColumn("_bucket",
       conv(substring(col(keyC), 1, 4), 16, 10).cast(LongType))
     val wIn = Window.partitionBy(col(grpC), col("_bucket"))
@@ -435,8 +427,7 @@ object Curation {
       .select(col(grpC), col("_bucket"),
         coalesce(sum(col("_bc")).over(wOff), lit(0L)).as("_cnt_off"),
         coalesce(sum(col("_bv")).over(wOff), lit(0L)).as("_val_off"))
-    inner.join(if (boundedGroups) broadcast(offsets) else offsets,
-        Seq(grpC, "_bucket"))
+    inner.join(offsets, Seq(grpC, "_bucket"))
       .withColumn("rank", col("_cnt_off") + col("_rn"))
       .withColumn("cum_before", col("_val_off") + col("_prev"))
       .drop("_bucket", "_rn", "_prev", "_cnt_off", "_val_off")
@@ -498,7 +489,7 @@ object Curation {
                                    total: DataFrame): DataFrame =
     toks.select(col("doc_id"), col("token"))
       .join(vocab, Seq("token"), "left")
-      .crossJoin(broadcast(total)) // 1-row LM normalizer
+      .crossJoin(total) // 1-row LM normalizer
       .withColumn("bits",
         when(col("ct").isNull, length(bin(col("total_ct"))).cast(LongType))
           .otherwise((length(bin(col("total_ct"))) -
@@ -571,7 +562,7 @@ object Curation {
         Seq("prev"), "left")
       .join(uniBits, Seq("token"), "left")
       .join(bi, Seq("prev", "token"), "left")
-      .crossJoin(broadcast(total))
+      .crossJoin(total)
       .withColumn("tbits", length(bin(col("total_ct"))))
       // unigram surprisal of the CURRENT token (OOV -> full tbits)
       .withColumn("usurp",
@@ -619,14 +610,14 @@ object Curation {
       .withColumn("isq", expr("cast(floor(sqrt(cast(mass as double))) as bigint)"))
     val tot = masses.agg(sum(col("mass")).as("total_mass"),
       sum(col("isq")).as("sum_isq"))
-    val budgets = masses.crossJoin(broadcast(tot))
+    val budgets = masses.crossJoin(tot)
       .withColumn("source_budget",
         expr(s"((total_mass div $MixtureDenom) * isq) div sum_isq"))
       .select(col("source"), col("source_budget"))
     val keyed = base.withColumn("pick_key",
       md5(concat(col("source"), lit(":"), col("doc_id").cast(StringType))))
     rankAndPrefix(keyed, "source", "pick_key", "tok_ct")
-      .join(broadcast(budgets), "source")
+      .join(budgets, "source")
       .withColumn("kept", (col("cum_before") < col("source_budget")).cast(LongType))
       .select(col("doc_id"), col("source"), col("tok_ct"),
         col("rank").as("pick_rank"), col("cum_before"),
@@ -659,7 +650,7 @@ object Curation {
     val keyed = docs.select(col("doc_id"),
       md5(concat(lit(s"epoch$epoch:"), col("doc_id").cast(StringType))).as("shuffle_key"),
       lit(1L).as("one"), lit(0L).as("grp"))
-    rankAndPrefix(keyed, "grp", "shuffle_key", "one", boundedGroups = true)
+    rankAndPrefix(keyed, "grp", "shuffle_key", "one")
       .withColumn("shuffle_pos", col("rank") - 1L)
       .withColumn("shard_id", expr(s"shuffle_pos div $ShuffleShardDocs"))
       .select(col("doc_id"), col("shuffle_key"), col("shuffle_pos"),
@@ -1019,7 +1010,7 @@ object Curation {
       .select(col("token"), coalesce(col("ct1"), lit(0L)).as("ct1"),
         coalesce(col("ct2"), lit(0L)).as("ct2"))
     val tot = j.agg(sum(col("ct1")).as("n1"), sum(col("ct2")).as("n2"))
-    j.crossJoin(broadcast(tot))
+    j.crossJoin(tot)
       .withColumn("pp", col("ct1").cast(DoubleType) / col("n1").cast(DoubleType))
       .withColumn("pq", col("ct2").cast(DoubleType) / col("n2").cast(DoubleType))
       .withColumn("m", (col("pp") + col("pq")) / lit(2.0))

@@ -206,9 +206,10 @@ object Dedup {
     * of a real corpus) never enter it — they are their own rep by
     * definition and are glued back with one left join at the end, so
     * the cost scales with the near-dup graph, not the corpus. */
-  def dedupComponents(spark: SparkSession, dir: String): DataFrame =
+  def dedupComponents(spark: SparkSession, dir: String, seedCap: Int = SeedCap): DataFrame =
     Tables.documents(spark, dir).select(col("doc_id"))
-      .join(componentLabels(verifiedPairs(spark, dir)).withColumnRenamed("rep_doc_id", "rep"),
+      .join(componentLabels(verifiedPairs(spark, dir), seedCap = seedCap)
+          .withColumnRenamed("rep_doc_id", "rep"),
         Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("rep"), col("doc_id")).as("rep_doc_id"))
       .orderBy(col("doc_id"))
@@ -249,7 +250,7 @@ object Dedup {
     *    phases when every component's edges share a partition.
     *  - The seed conflict count and each phase's edge count are read
     *    by the same job that materializes the frame's lazy
-    *    `localCheckpoint` ([[checkpointCounted]]). Without truncating
+    *    `localCheckpoint` ([[Memo.checkpointCounted]]). Without truncating
     *    lineage the plan doubles per phase and the driver OOMs building
     *    it (at cluster scale use reliable `checkpoint` so a lost
     *    executor can't drop a phase). Labels never leave executors.
@@ -278,13 +279,13 @@ object Dedup {
       .toDF("doc_id", "seed")
       .groupBy(col("doc_id"))
       .agg(min(col("seed")).as("rep_doc_id"), collect_set(col("seed")).as("seeds"))
-    val (seeded, conflicted) = checkpointCounted(seeds, size(col("seeds")) > 1)
+    val (seeded, conflicted) = Memo.checkpointCounted(seeds, size(col("seeds")) > 1)
     val labels = seeded.select(col("doc_id"), col("rep_doc_id"))
     if (conflicted == 0) labels
     else {
       // star edges are oriented a > b and distinct; the row counts gate
       // the exact set-equality check below for free
-      var (edges, nEdges) = checkpointCounted(seeded
+      var (edges, nEdges) = Memo.checkpointCounted(seeded
         .select(explode(col("seeds")).as("a"), col("rep_doc_id").as("b"))
         .filter(col("a") =!= col("b")).distinct())
       var converged = false
@@ -317,7 +318,7 @@ object Dedup {
           .filter(col("v") =!= col("m"))
           .select(greatest(col("v"), col("m")).as("a"), least(col("v"), col("m")).as("b"))
           .distinct()
-        val (ssCk, nSs) = checkpointCounted(ss)
+        val (ssCk, nSs) = Memo.checkpointCounted(ss)
         // both frames are distinct by construction, so they are equal as
         // sets iff their counts match AND every (a, b) of their union
         // appears exactly twice (one grouped count — still EXACT, never
@@ -334,10 +335,13 @@ object Dedup {
         s"[graft] componentLabels: no fixpoint within $maxIter star phases — the labels " +
           "would be a partial (wrong) closure; raise maxIter")
       // a converged star set has one row per non-minimum label: a -> b,
-      // its component minimum; minima carry no row
-      labels.join(edges.select(col("a").as("rep_doc_id"), col("b").as("root")),
+      // its component minimum; minima carry no row. The relabel is
+      // checkpointed so callers plan against measured labels, not the
+      // join's product-of-children size estimate.
+      val relabeled = labels.join(edges.select(col("a").as("rep_doc_id"), col("b").as("root")),
           Seq("rep_doc_id"), "left")
         .select(col("doc_id"), coalesce(col("root"), col("rep_doc_id")).as("rep_doc_id"))
+      Memo.checkpointCounted(relabeled)._1
     }
   }
 
@@ -369,16 +373,6 @@ object Dedup {
 
     /** (vertex, min of its set) for every vertex seen. */
     def labels: Iterator[(Long, Long)] = parent.keys.toArray.iterator.map(v => (v, find(v)))
-  }
-
-  /** A lazy `localCheckpoint` of `df` plus the number of its rows
-    * matching `where`, from ONE job: the count's scan of the lazy
-    * checkpoint is what materializes it (an eager `localCheckpoint`
-    * runs its own count internally and throws the value away), so a
-    * loop can test convergence every phase at no extra driver action. */
-  private def checkpointCounted(df: DataFrame, where: Column = lit(true)): (DataFrame, Long) = {
-    val ck = df.localCheckpoint(false)
-    (ck, ck.filter(where).count())
   }
 
   /** Exact-substring overlap pairs: documents sharing at least one
@@ -549,16 +543,13 @@ object Dedup {
       Tables.spread(spark, Tables.documents(spark, dir))
         .select(col("doc_id"), GraftExpressions.shingleHashes(toks(col("text")), 3).as("sh")))
 
-  /** Per-doc minhash signature banded into LSH bucket keys.
-    * The i-th "permutation" of a shingle hash is (a_i·h + b_i) mod
-    * 2^61-1 with odd constants derived from i. */
-  def minhashSignatures(spark: SparkSession, dir: String): DataFrame =
-    minhashSignaturesFrom(shingled(spark, dir))
-
   /** LSH bucket key of band `bnd` over a `sig` column. */
   private def bandCol(bnd: Int): Column =
     xxhash64((bnd * BandSize until (bnd + 1) * BandSize).map(i => col("sig").getItem(i)): _*)
 
+  /** Per-doc minhash signature banded into LSH bucket keys.
+    * The i-th "permutation" of a shingle hash is (a_i·h + b_i) mod
+    * 2^61-1 with odd constants derived from i. */
   private[graft] def minhashSignaturesFrom(sh: DataFrame): DataFrame = {
     val d = sh.filter(size(col("sh")) > 0)
     // one fused codegen'd pass computes all NumHashes minima (identical

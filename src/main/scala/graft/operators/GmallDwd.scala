@@ -311,9 +311,9 @@ object GmallDwd {
                                  c: DataFrame, n: DataFrame): DataFrame = {
     val one = lit(1).cast(DecimalType(18, 2))
     li.join(o, li("l_orderkey") === o("o_orderkey"))
-      .join(broadcast(p), li("l_partkey") === p("p_partkey"))
-      .join(broadcast(c), o("o_custkey") === c("c_custkey"))
-      .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
+      .join(p, li("l_partkey") === p("p_partkey"))
+      .join(c, o("o_custkey") === c("c_custkey"))
+      .join(n, c("c_nationkey") === n("n_nationkey"))
       .select(
         col("l_orderkey").as("order_id"),
         col("l_linenumber").as("line_no"),

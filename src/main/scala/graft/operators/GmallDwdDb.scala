@@ -521,8 +521,8 @@ object GmallDwdDb {
   def tradeOrderRefundOn(ri: DataFrame, oi: DataFrame, dic: DataFrame): DataFrame = {
     val (typeDic, reasonDic) = refundDics(dic)
     refundProject(ri.join(oi, ri("order_id") === col("oid"), "left")
-      .join(broadcast(typeDic), col("refund_type_code") === col("t_code"), "left")
-      .join(broadcast(reasonDic), col("refund_reason_type_code") === col("r_code"), "left"))
+      .join(typeDic, col("refund_type_code") === col("t_code"), "left")
+      .join(reasonDic, col("refund_reason_type_code") === col("r_code"), "left"))
   }
 
   def tradeOrderRefund(spark: SparkSession, dir: String): DataFrame = {
@@ -549,6 +549,7 @@ object GmallDwdDb {
     val (typeDic, reasonDic) = refundDics(dic)
     val joined = Joins.streamStream(ri, ack, "order_id", "oid", "ri_et", "ack_et",
         boundSec, boundSec, joinType = "leftOuter")
+      // hints: J3 stream-static lookups, each micro-batch probes the dictionary snapshot
       .join(broadcast(typeDic), col("refund_type_code") === col("t_code"), "left")
       .join(broadcast(reasonDic), col("refund_reason_type_code") === col("r_code"), "left")
     // keepEventTime: retain the refund side's watermarked ri_et so a
@@ -599,7 +600,7 @@ object GmallDwdDb {
     * missing rows) the first time it doesn't. Zero extra scans or
     * exchanges (the guard is a projection; the join stays broadcast). */
   def joinSkuDimChecked(facts: DataFrame, sku: DataFrame): DataFrame =
-    facts.join(broadcast(sku), Seq("sku_id"), "left")
+    facts.join(sku, Seq("sku_id"), "left")
       .withColumn("trademark_id",
         when(col("trademark_id").isNotNull, col("trademark_id"))
           .otherwise(raise_error(concat(
@@ -670,7 +671,7 @@ object GmallDwdDb {
   /** `DwdInteractionComment.java:77-80`: comment inserts ⟕ base_dic. */
   def interactionCommentOn(env: DataFrame, dic: DataFrame): DataFrame =
     LogStream.cdcSlice(env, "comment_info", Seq("insert"))
-      .join(broadcast(dic), d("appraise") === col("dic_code"), "left")
+      .join(dic, d("appraise") === col("dic_code"), "left")
       .select(d("id").as("id"), d("user_id").as("user_id"),
         d("sku_id").as("sku_id"), d("order_id").as("order_id"),
         substring(d("create_time"), 1, 10).as("date_id"),
@@ -776,7 +777,7 @@ object GmallDwdDb {
     od.join(oi, od("order_id") === oi("oi_id"))
       .join(oa, od("order_detail_id") === oa("oa_order_detail_id"), "left")
       .join(oc, od("order_detail_id") === oc("oc_order_detail_id"), "left")
-      .join(broadcast(dic), od("source_type") === dic("dic_code"))
+      .join(dic, od("source_type") === dic("dic_code"))
       .drop("oi_id", "oa_order_detail_id", "oc_order_detail_id", "dic_code",
         "oi_ts", "oa_ts", "oc_ts")
 
@@ -836,6 +837,7 @@ object GmallDwdDb {
     val dropped = Seq("oi_id", "oa_order_detail_id", "oc_order_detail_id", "dic_code",
       "oi_ts", "oa_ts", "oc_ts", "oi_et", "oa_et", "oc_et", "pt", "old") ++
       (if (keepEventTime) Nil else Seq("od_et"))
+    // hint: J3 stream-static lookup, each micro-batch probes the dictionary snapshot
     j3.join(broadcast(dic), col("source_type") === dic("dic_code"))
       .drop(dropped: _*)
   }
@@ -871,7 +873,7 @@ object GmallDwdDb {
     val payDic = dic.select(col("dic_code").as("pay_dic_code"),
       col("dic_name").as("payment_type_name"))
     pay.join(w, col("pay_order_id") === w("order_id"))
-      .join(broadcast(payDic), col("payment_type_code") === col("pay_dic_code"))
+      .join(payDic, col("payment_type_code") === col("pay_dic_code"))
       .select(col("order_detail_id"), col("order_id"), col("user_id"),
         col("sku_id"), col("province_id"), col("activity_id"),
         col("activity_rule_id"), col("coupon_id"), col("payment_type_code"),
@@ -898,7 +900,7 @@ object GmallDwdDb {
             LogStream.columnChanged(col("old"), "sku_num") &&
             d("sku_num").cast(IntegerType) >
               col("old").getItem("sku_num").cast(IntegerType))))
-      .join(broadcast(dic), d("source_type") === col("dic_code"))
+      .join(dic, d("source_type") === col("dic_code"))
       .select(d("id").as("id"), d("user_id").as("user_id"),
         d("sku_id").as("sku_id"), d("cart_price").as("cart_price"),
         when(col("type") === "insert", d("sku_num").cast(IntegerType))

@@ -35,15 +35,16 @@ object Governance {
   /** Per-table erasure impact: total rows, rows erased (direct victim
     * rows, plus the order→lineitem cascade), rows kept. */
   def erasureReport(spark: SparkSession, dir: String): DataFrame = {
-    val v = broadcast(victims(spark, dir))
+    val v = victims(spark, dir)
 
     val customer = Tables.customer(spark, dir)
     val orders = Tables.orders(spark, dir)
     val lineitem = Tables.lineitem(spark, dir)
     val events = Tables.events(spark, dir)
 
-    val doomedOrders = orders.join(v, orders("o_custkey") === v("uid"))
-      .select(col("o_orderkey"))
+    // a semi join (uid is unique): it keeps the orders side's size estimate
+    val doomed = orders.join(v, orders("o_custkey") === v("uid"), "left_semi")
+    val doomedOrders = doomed.select(col("o_orderkey"))
 
     def row(name: String, total: DataFrame, erased: DataFrame): DataFrame = {
       val t = total.agg(count(lit(1)).as("total_rows"))
@@ -55,10 +56,9 @@ object Governance {
 
     row("customer", customer,
         customer.join(v, customer("c_custkey") === v("uid"), "left_semi"))
-      .unionByName(row("orders", orders,
-        orders.join(v, orders("o_custkey") === v("uid"), "left_semi")))
+      .unionByName(row("orders", orders, doomed))
       .unionByName(row("lineitem", lineitem,
-        lineitem.join(broadcast(doomedOrders),
+        lineitem.join(doomedOrders,
           lineitem("l_orderkey") === doomedOrders("o_orderkey"), "left_semi")))
       .unionByName(row("events", events,
         events.join(v, events("user_id") === v("uid"), "left_semi")))
@@ -179,7 +179,7 @@ object Governance {
       date_format(date_sub(to_date(max(col("ts"))), retainDays), "yyyy-MM-dd").as("h"))
     ev.groupBy(date_format(col("ts"), "yyyy-MM-dd").as("dt"))
       .agg(count(lit(1)).as("row_ct"), countDistinct(col("user_id")).as("user_ct"))
-      .crossJoin(broadcast(horizon))
+      .crossJoin(horizon)
       .select(col("dt"), col("row_ct"), col("user_ct"),
         when(col("dt") < col("h"), "drop").otherwise("retain").as("action"))
       .orderBy(col("dt"))

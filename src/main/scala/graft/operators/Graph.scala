@@ -54,7 +54,7 @@ object Graph {
       .agg(count(lit(1)).as("ct"))
     val totals = pairs.groupBy(col("src").as("t_src"))
       .agg(sum(col("ct")).as("from_ct"))
-    pairs.join(broadcast(totals), col("src") === col("t_src"))
+    pairs.join(totals, col("src") === col("t_src"))
       .select(col("src"), col("dst"),
         (col("ct").cast(DoubleType) / col("from_ct").cast(DoubleType)).as("p"))
   }
@@ -83,14 +83,14 @@ object Graph {
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst"))).distinct()
     val n = nodes.agg(count(lit(1)).as("n"))
-    var ranks = nodes.crossJoin(broadcast(n))
+    var ranks = nodes.crossJoin(n)
       .select(col("node"), (lit(1.0) / col("n")).as("pagerank"))
     for (i <- 1 to iters) {
       val summed = e.join(ranks, col("src") === col("node"))
         .select(col("dst"), (col("pagerank") * col("p")).as("contrib"))
         .groupBy(col("dst")).agg(foldSum("contrib").as("s"))
       ranks = nodes.join(summed, col("node") === col("dst"), "left")
-        .crossJoin(broadcast(n))
+        .crossJoin(n)
         .select(col("node"),
           (lit(Teleport.toDouble) / col("n") +
             lit(Damping.toDouble) * coalesce(col("s"), lit(0.0))).as("pagerank"))

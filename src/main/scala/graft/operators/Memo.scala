@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileContext, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, MeasuredLeaf, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.storage.StorageLevel
 import scala.collection.concurrent.TrieMap
 
@@ -9,18 +11,45 @@ import scala.collection.concurrent.TrieMap
   * analog of the reference's shared DWD Kafka topics: each derived
   * frame is built once per session+dir and read by every downstream
   * query. Two backends, chosen per build by [[LevelConf]]:
-  *  - a `StorageLevel` (default `MEMORY_AND_DISK`): an eager
-  *    `localCheckpoint`. Consumers plan against one opaque `LogicalRDD`
-  *    leaf, and the CacheManager never sees the plan, so a named query
-  *    whose output equals a memo frame still computes its own plan.
-  *    The ContextCleaner frees the blocks once [[invalidate]] drops
-  *    the frame.
-  *  - `PARQUET`: written once under [[DirConf]], then read back.
+  *  - a `StorageLevel` (default `MEMORY_AND_DISK`): a
+  *    `localCheckpoint` ([[checkpointCounted]]). Consumers plan against
+  *    one `LogicalRDD` leaf that reports what was stored (row count and
+  *    block bytes), so the planner's broadcast threshold, not a hint,
+  *    decides how a small memo joins. The CacheManager never sees the
+  *    plan, so a named query whose output equals a memo frame still
+  *    computes its own plan. The ContextCleaner frees the blocks once
+  *    [[invalidate]] drops the frame.
+  *  - `PARQUET`: written once under [[DirConf]], then read back; the
+  *    file scan reports the file sizes.
   * One store for all operator modules, so a backfill invalidates every
   * frame derived from a dir with one call. Frames snapshot the parquet
   * at first access. */
 private[graft] object Memo {
-  private val memo = TrieMap[(SparkSession, String, String), DataFrame]()
+  /** Each frame, with the analyzed plan that built it for checkpoint
+    * builds, so a plan sweep can look through the leaf. Only [[apply]]
+    * keeps a plan: a loop's [[checkpointCounted]] frames are dropped
+    * mid-loop and must not be kept reachable here. */
+  private val memo = TrieMap[(SparkSession, String, String), (DataFrame, Option[LogicalPlan])]()
+
+  /** (memo frame, the plan that built it) for every checkpoint memo
+    * of `spark`. */
+  private[graft] def buildPlans(spark: SparkSession): Seq[(DataFrame, LogicalPlan)] =
+    memo.toSeq.collect { case (k, (frame, Some(plan))) if k._1 == spark => (frame, plan) }
+
+  /** A lazy `localCheckpoint` of `df` at `level`, materialized by ONE
+    * job that counts its rows and the rows matching `where` (an eager
+    * checkpoint runs its own count and throws the value away). Returns
+    * the leaf with measured statistics ([[MeasuredLeaf]]) and the
+    * `where` count, so a loop tests convergence at no extra action. */
+  private[graft] def checkpointCounted(df: DataFrame, where: Column = lit(true),
+      level: StorageLevel = StorageLevel.MEMORY_AND_DISK): (DataFrame, Long) = {
+    val ck = df.localCheckpoint(false, level)
+    // an RDD fold over the leaf, not a Dataset count: no exchange
+    val (rows, matched) = ck.select(where).queryExecution.toRdd.aggregate((0L, 0L))(
+      (n, r) => (n._1 + 1, if (!r.isNullAt(0) && r.getBoolean(0)) n._2 + 1 else n._2),
+      (a, b) => (a._1 + b._1, a._2 + b._2))
+    (MeasuredLeaf(ck, rows), matched)
+  }
 
   /** Session conf key selecting the backend: a `StorageLevel` name
     * other than `NONE`, or `PARQUET` (also settable per process via
@@ -150,10 +179,13 @@ private[graft] object Memo {
       val lvl = level(spark)
       locks.getOrElseUpdate((dir, name), new Object).synchronized {
         memo.getOrElseUpdate(key,
-          if (lvl == "PARQUET") materialize(spark, dir, name)(build)
-          else build.localCheckpoint(true, StorageLevel.fromString(lvl)))
+          if (lvl == "PARQUET") (materialize(spark, dir, name)(build), None)
+          else {
+            val b = build
+            (checkpointCounted(b, level = StorageLevel.fromString(lvl))._1, Some(b.queryExecution.analyzed))
+          })
       }
-    })
+    })._1
   }
 
   // Driver-side VALUE memo (k-means models, other small derived

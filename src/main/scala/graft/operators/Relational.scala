@@ -23,9 +23,11 @@ import graft.functions.Num._
   *  - M4  UNION ALL with literal tags            (`TradeStatsMapper.java:18-37`)
   *
   * Scale notes (100 TB design): fact-fact joins shuffle on their join
-  * key and rely on AQE for skew; every dimension join is an explicit
-  * `broadcast()`; filters/projections stay in the initial select so
-  * Catalyst pushes them into the parquet scan.
+  * key and rely on AQE for skew; no join carries a hint: a dimension
+  * broadcasts while its scan size fits the planner's threshold and
+  * shuffles when it outgrows it (SCALE.md "Join strategy");
+  * filters/projections stay in the initial select so Catalyst pushes
+  * them into the parquet scan.
   */
 object Relational {
 
@@ -135,9 +137,9 @@ object Relational {
     val s = Tables.supplier(spark, dir)
     val n = Tables.nation(spark, dir)
     val r = Tables.region(spark, dir)
-    li.join(broadcast(s), li("l_suppkey") === s("s_suppkey"))
-      .join(broadcast(n), s("s_nationkey") === n("n_nationkey"))
-      .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
+    li.join(s, li("l_suppkey") === s("s_suppkey"))
+      .join(n, s("s_nationkey") === n("n_nationkey"))
+      .join(r, n("n_regionkey") === r("r_regionkey"))
       .groupBy(col("r_name"), col("n_name"))
       .agg(
         dsum2(col("l_extendedprice")).as("gross"),
@@ -163,18 +165,15 @@ object Relational {
     val r = Tables.region(spark, dir)
     val p = Tables.part(spark, dir)
     val perOrderBrand = li
-      .join(broadcast(p), li("l_partkey") === p("p_partkey"))
+      .join(p, li("l_partkey") === p("p_partkey"))
       .groupBy(col("l_orderkey"), col("p_brand"))
       // DECIMAL partial (not dsum) — see innerJoinAgg
       .agg(sum(dec2(col("l_extendedprice")) * (lit(1).cast(DecimalType(18, 2)) - dec2(col("l_discount")))).as("rev"))
-    // orders is a FACT side — no broadcast hint (locally it
-    // auto-broadcasts under the 64 MB threshold; at cluster scale the
-    // planner must stay free to shuffle it)
     perOrderBrand
       .join(o, col("l_orderkey") === o("o_orderkey"))
-      .join(broadcast(c), o("o_custkey") === c("c_custkey"))
-      .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-      .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
+      .join(c, o("o_custkey") === c("c_custkey"))
+      .join(n, c("c_nationkey") === n("n_nationkey"))
+      .join(r, n("n_regionkey") === r("r_regionkey"))
       .groupBy(col("r_name"), col("p_brand"))
       .agg(
         dsum(col("rev")).as("revenue"),
@@ -239,7 +238,7 @@ object Relational {
   def topK(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir)
     val p = Tables.part(spark, dir)
-    li.join(broadcast(p), li("l_partkey") === p("p_partkey"))
+    li.join(p, li("l_partkey") === p("p_partkey"))
       .groupBy(col("p_brand"))
       .agg(dsum2(col("l_extendedprice")).as("revenue"), count(lit(1)).as("line_ct"))
       .orderBy(col("revenue").desc, col("p_brand"))

@@ -119,23 +119,12 @@ object Search {
     // stateless, so a STREAMING qdf stays single-stateful-operator.
     val qterms = qdf.select(col("qid"),
       explode(array_distinct(split(col("qtext"), " "))).as("qterm"))
-    // a streaming side cannot take a broadcast hint; batch query sets
-    // broadcast so postings rows for non-query terms never shuffle
-    val qside = if (qdf.isStreaming) qterms else broadcast(qterms)
-    // tdf is VOCABULARY-proportional (the hapax tail grows with the
-    // corpus) — never force-broadcast it whole. Batch: restrict to the
-    // query terms first (workload-bounded, join semantics unchanged —
-    // the probe already carries only query terms) and broadcast THAT.
-    // Streaming: a static side can't be pre-restricted by the stream;
-    // leave it hintless for the per-batch planner.
-    val dfsAll = tdf.select(col("term").as("dterm"), col("dfv"))
-    val dfside =
-      if (qdf.isStreaming) dfsAll
-      else broadcast(dfsAll.join(
-        qterms.select(col("qterm").as("dterm")).distinct(), Seq("dterm")))
-    val j = tf.join(qside, col("qterm") === col("term"))
-      .join(dfside, col("term") === col("dterm"))
-      .crossJoin(broadcast(stats))
+    // no hints: the query side is workload-sized (a measured memo, a
+    // local frame or one micro-batch) and broadcasts by size; tdf is
+    // vocabulary-proportional and broadcasts only while it fits
+    val j = tf.join(qterms, col("qterm") === col("term"))
+      .join(tdf.select(col("term").as("dterm"), col("dfv")), col("term") === col("dterm"))
+      .crossJoin(stats)
     // expression order mirrors the oracle SQL token for token — every
     // op is IEEE correctly-rounded, so bits agree cross-engine
     val nd = col("n_docs").cast(DoubleType)
@@ -192,7 +181,7 @@ object Search {
     tdf.orderBy(col("dfv").desc, col("term")).limit(maxRank)
       .withColumn("rnk",
         row_number().over(Window.orderBy(col("dfv").desc, col("term"))))
-      .join(broadcast(WorkloadSlots.toDF("qid", "slot", "rnk")), Seq("rnk"))
+      .join(WorkloadSlots.toDF("qid", "slot", "rnk"), Seq("rnk"))
       .groupBy(col("qid"))
       .agg(concat_ws(" ", transform(
         array_sort(collect_list(struct(col("slot"), col("term")))),
@@ -310,17 +299,17 @@ object Search {
     // engine and oracle
     val qv = Similarity.quantizedOn(Tables.spread(spark, Tables.embeddings(spark, dir)))
       .filter(col("nrm") > 0)
-    val anchors = qv.join(
-        broadcast(cand.filter(col("rk") === 1)
-          .select(col("qid"), col("doc_id").as("anchor_id"))),
-        col("vec_id") === col("anchor_id"))
-      .select(col("qid"), col("q").as("qa"), col("nrm").as("na"))
-    val pool = qv.join(
-        broadcast(cand.select(col("qid"), col("doc_id"), col("score_fp"))),
+    // checkpointed: the pool is queries × candidates rows, so its
+    // measured size (not the join's product estimate) lets the anchor
+    // slice broadcast back into it, and the vectors are read once
+    val pool = Memo.checkpointCounted(qv.join(
+        cand.select(col("qid"), col("doc_id"), col("score_fp"), col("rk").as("cand_rk")),
         col("vec_id") === col("doc_id"))
-      .select(col("qid"), col("doc_id"), col("score_fp"),
-        col("q").as("qb"), col("nrm").as("nb"))
-    pool.join(broadcast(anchors), Seq("qid"))
+      .select(col("qid"), col("doc_id"), col("score_fp"), col("cand_rk"),
+        col("q").as("qb"), col("nrm").as("nb")))._1
+    val anchors = pool.filter(col("cand_rk") === 1)
+      .select(col("qid"), col("qb").as("qa"), col("nb").as("na"))
+    pool.join(anchors, Seq("qid"))
       .withColumn("dot", GraftExpressions.dotLong(col("qa"), col("qb")))
       .withColumn("sim", col("dot").cast(DoubleType) /
         (sqrt(col("na").cast(DoubleType)) * sqrt(col("nb").cast(DoubleType))))
@@ -398,8 +387,7 @@ object Search {
       topKTwoPhase(bm25Memo(spark, dir), HybridCandidates))
     val qv = Similarity.quantizedOn(Tables.spread(spark, Tables.embeddings(spark, dir)))
       .filter(col("nrm") > 0)
-    val pool = qv.join(
-        broadcast(cand.select(col("qid"), col("doc_id"), col("score_fp"))),
+    val pool = qv.join(cand.select(col("qid"), col("doc_id"), col("score_fp")),
         col("vec_id") === col("doc_id"))
       .select(col("qid"), col("doc_id"), col("score_fp"), col("q"), col("nrm"))
     // rel/sims are loop invariants read by every greedy stage, and
@@ -482,7 +470,7 @@ object Search {
       .withColumn("w2", split(col("bigram"), " ").getItem(1))
       .join(toks.select(col("token").as("w1"), col("token_ct").as("a_ct")), Seq("w1"))
       .join(toks.select(col("token").as("w2"), col("token_ct").as("b_ct")), Seq("w2"))
-      .crossJoin(broadcast(nTok)).crossJoin(broadcast(nBg))
+      .crossJoin(nTok).crossJoin(nBg)
       .withColumn("ratio",
         (col("bigram_ct").cast(DoubleType) * col("n_tok").cast(DoubleType) *
           col("n_tok").cast(DoubleType)) /
@@ -552,22 +540,16 @@ object Search {
     // instead of re-running the v1⟗v2 full-outer subtree per reference
     val diff = Curation.snapshotDiffShared(spark, dir)
     // gone/fresh are delta-doc-id lists and touched is the delta
-    // vocabulary — both orders of magnitude below the index frames they
-    // join, but behind a checkpoint Catalyst has no size estimate, so
-    // every join planned as a full sort-merge that re-shuffled the v1
-    // tf frame by doc_id and the v2 index by token (r18, guide §3.1:
-    // explicit broadcast; the r17 io shows 4.6 MB shuffled, mostly
-    // those re-shuffles).
-    val gone = broadcast(diff.filter(col("status").isin("removed", "changed"))
-      .select(col("doc_id")))
-    val fresh = broadcast(diff.filter(col("status").isin("added", "changed"))
-      .select(col("doc_id")))
+    // vocabulary: the diff memo reports its stored size, so they
+    // broadcast by size into the index frames they join
+    val gone = diff.filter(col("status").isin("removed", "changed")).select(col("doc_id"))
+    val fresh = diff.filter(col("status").isin("added", "changed")).select(col("doc_id"))
     val tfNew = v2.join(fresh, Seq("doc_id"))
       .select(col("doc_id"), explode(Curation.tokensCol).as("token"))
       .groupBy(col("token"), col("doc_id")).agg(count(lit(1)).as("tf"))
     val tf2 = tf1.join(gone, Seq("doc_id"), "left_anti").unionByName(tfNew)
-    val touched = broadcast(tf1.join(gone, Seq("doc_id")).select(col("token"))
-      .unionByName(tfNew.select(col("token"))).distinct())
+    val touched = tf1.join(gone, Seq("doc_id")).select(col("token"))
+      .unionByName(tfNew.select(col("token"))).distinct()
     val recomputed = postingsOn(tf2.join(touched, Seq("token")))
     val carried = postings1.join(touched, Seq("token"), "left_anti")
     recomputed.unionByName(carried).orderBy(col("token"))
@@ -610,11 +592,11 @@ object Search {
       .select(col("pid"), posexplode(split(col("ptext"), " ")).as(Seq("idx", "term")))
     val plens = pdf
       .select(col("pid"), size(split(col("ptext"), " ")).cast(LongType).as("plen"))
-    tok.join(broadcast(pterms), col("token") === col("term"))
+    tok.join(pterms, col("token") === col("term"))
       .select(col("pid"), col("doc_id"), (col("pos") - col("idx")).as("start"))
       .groupBy(col("pid"), col("doc_id"), col("start"))
       .agg(count(lit(1)).as("hits"))
-      .join(broadcast(plens), Seq("pid"))
+      .join(plens, Seq("pid"))
       .filter(col("hits") === col("plen"))
       .groupBy(col("pid"), col("doc_id"))
       .agg(count(lit(1)).as("n_occurrences"),
@@ -702,11 +684,10 @@ object Search {
     val (tf, tdf, stats) = indexFrames(spark, dir)
     val scored = tf
       // both sides are data-proportional here (corpus postings ⋈ full
-      // vocabulary) — no forced broadcast; AQE broadcasts the df frame
-      // while it fits and degrades to a shuffle join on term when not
-      .join(tdf.select(col("term").as("dterm"), col("dfv")),
-        col("term") === col("dterm"))
-      .crossJoin(broadcast(stats.select(col("n_docs"))))
+      // vocabulary): the df frame broadcasts while it fits and the
+      // join degrades to a shuffle on term when not
+      .join(tdf.select(col("term").as("dterm"), col("dfv")), col("term") === col("dterm"))
+      .crossJoin(stats.select(col("n_docs")))
       .withColumn("idf_fp", floor(
         detLn(col("n_docs").cast(DoubleType) / col("dfv").cast(DoubleType))
           * lit(ScoreScale)).cast(LongType))
@@ -752,8 +733,8 @@ object Search {
     val qterms = searchWorkload(spark, dir)
       .select(col("qid"), explode(array_distinct(split(col("qtext"), " "))).as("term"))
     val tok = Curation.tokensShared(spark, dir)
-    val matches = tok.join(broadcast(qterms), col("token") === col("term"))
-      .join(broadcast(top), Seq("qid", "doc_id"))
+    val matches = tok.join(qterms, col("token") === col("term"))
+      .join(top, Seq("qid", "doc_id"))
       .select(col("qid"), col("doc_id"), col("pos"), col("term"))
     val starts = matches.select(col("qid"), col("doc_id"), col("pos").as("start"))
     val best = starts.join(matches, Seq("qid", "doc_id"))
@@ -792,10 +773,7 @@ object Search {
       .join(top.select(col("qid").as("qid_b"), col("doc_id")), Seq("doc_id"))
       .filter(col("qid_a") < col("qid_b"))
       .groupBy(col("qid_a"), col("qid_b")).agg(count(lit(1)).as("overlap_ct"))
-    // explicit broadcast (guide §3.1): both sides are workload-sized
-    // (≤ |queries| rows) by construction, but behind the memo
-    // checkpoint Catalyst has no size estimate and a hintless non-equi
-    // join degrades to CartesianProduct
+    // hint: a non-equi join has no shuffle form, only a broadcast or a CartesianProduct
     broadcast(sz.select(col("qid").as("qid_a"), col("n").as("n_a")))
       .join(sz.select(col("qid").as("qid_b"), col("n").as("n_b")),
         col("qid_a") < col("qid_b"))

@@ -76,6 +76,7 @@ object Similarity {
     * reproduce this result — see the LlmOpsSpec recall math.) */
   def nearDupPairs(spark: SparkSession, dir: String, threshold: Double = 0.3): DataFrame = {
     val v = quantized(spark, dir)
+    // hint: the panel is a fixed 256 rows; a non-equi join has no shuffle form
     val a = broadcast(v.filter(col("vec_id") < NearDupPanel)
       .select(col("vec_id").as("vec_a"), col("q").as("qa"), col("nrm").as("na")))
     val b = v.select(col("vec_id").as("vec_b"), col("q").as("qb"), col("nrm").as("nb"))
@@ -215,9 +216,6 @@ object Similarity {
     val tableCols = (0 until NumTables).map(t => col("b").getItem(t).as(s"bucket_$t"))
     withB.select(col("vec_id") +: col("embedding") +: tableCols: _*)
   }
-
-  def lshBuckets(spark: SparkSession, dir: String): DataFrame =
-    lshBucketsOn(Tables.spread(spark, Tables.embeddings(spark, dir)))
 
   /** One (vec_id, t, bucket) row per table, from ONE signature pass:
     * the fused HyperplaneBuckets expression evaluates once per vector
@@ -380,14 +378,6 @@ object Similarity {
                                cents: Array[Array[Float]]): DataFrame =
     e.withColumn("centroid_id",
       GraftExpressions.nearestCentroidsFloat(col("embedding"), ids, cents, 1).getItem(0))
-
-  /** Centroid model as a DataFrame, for inspection / downstream reuse. */
-  def kmeansCentroids(spark: SparkSession, dir: String,
-                      iters: Int = KMeansIters): DataFrame = {
-    val (ids, cents) = kmeansModel(spark, dir, iters)
-    import spark.implicits._
-    ids.zip(cents.map(_.toSeq)).toSeq.toDF("centroid_id", "ce")
-  }
 
   /** IVF-style ANN: database vectors are assigned to their nearest
     * coarse centroid; a query probes its `NProbe` nearest centroid
@@ -781,9 +771,7 @@ object Similarity {
         col("nrm").as("na"), col("label").as("qlabel"))
     val c = v.select(col("vec_id").as("neighbor_id"), col("q").as("qb"),
       col("nrm").as("nb"), col("label").as("neighbor_label"))
-    // explicit hint: the label attach hides the query side's tiny
-    // cardinality from the planner, which otherwise falls back to a
-    // CartesianProduct for this non-equi join (plan-pinned in spec)
+    // hint: a non-equi join has no shuffle form, only a broadcast or a CartesianProduct
     broadcast(q).join(c, col("query_id") =!= col("neighbor_id"))
       .filter(col("qlabel") =!= col("neighbor_label"))
       .withColumn("dot", dotCol)
@@ -941,7 +929,7 @@ object Similarity {
       .select(col("query_id"),
         expr(s"aggregate(transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), $fold)").as("qn"),
         expr(s"stack($PqM, $slices) AS (m, qm)"))
-    val lut = q.join(broadcast(cb), Seq("m"))
+    val lut = q.join(cb, Seq("m"))
       .select(col("query_id"), col("qn"), col("m"), col("code"),
         expr(s"aggregate(zip_with(qm, ce, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), $fold)").as("term"),
         expr(s"aggregate(transform(ce, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), $fold)").as("cn"))
@@ -949,7 +937,7 @@ object Similarity {
     val codes = memoPqCodes(spark, dir)
       .select(col("vec_id"), expr(s"stack($PqM, $codeStack) AS (m, code)"))
     def only(m: Int, c: Column) = sum(when(col("m") === m, c))
-    codes.join(broadcast(lut), Seq("m", "code"))
+    codes.join(lut, Seq("m", "code"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(max(col("qn")).as("qn"),
         only(0, col("term")).as("t0"), only(1, col("term")).as("t1"),
@@ -991,7 +979,7 @@ object Similarity {
       val cb = ids.zip(cents)
         .map { case (cid, ce) => (cid.toLong, ce.toSeq) }.toSeq
         .toDF(s"code_$m", s"ce_$m")
-      df = df.join(broadcast(cb), Seq(s"code_$m"))
+      df = df.join(cb, Seq(s"code_$m"))
         .withColumn(s"t$m",
           expr(s"aggregate(zip_with(slice(embedding, ${m * PqSubDim + 1}, $PqSubDim), ce_$m, " +
             s"(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), $fold)"))
@@ -1023,7 +1011,7 @@ object Similarity {
       val e = Tables.spread(spark, Tables.embeddings(spark, dir))
         .select(col("vec_id"), col("embedding"))
       ivfAssign(e, ids, cents)
-        .join(broadcast(cdf), Seq("centroid_id"))
+        .join(cdf, Seq("centroid_id"))
         .select(col("vec_id"), col("centroid_id").cast(LongType).as("centroid_id"),
           col("embedding"),
           expr("zip_with(embedding, cce, (x, y) -> x - y)").as("rv"))
@@ -1131,25 +1119,27 @@ object Similarity {
         explode(GraftExpressions.nearestCentroidsFloat(
           col("embedding"), kids, kcents, NProbe)).as("cid0"))
       .withColumn("centroid_id", col("cid0").cast(LongType))
-      .join(broadcast(cdf), Seq("centroid_id"))
+      .join(cdf, Seq("centroid_id"))
       .select(col("query_id"), col("qn"), col("centroid_id"),
         expr(s"aggregate(zip_with(embedding, cce, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), $fold)").as("qc"),
         expr(s"aggregate(transform(cce, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), $fold)").as("cn"))
     val slices = (0 until PqM).map(m =>
       s"CAST($m AS BIGINT), slice(embedding, ${m * PqSubDim + 1}, $PqSubDim)").mkString(", ")
-    val lut = q0
+    // queries × PqM × codes rows, checkpointed so the corpus join sees
+    // its measured size instead of the q0 ⋈ rcb product estimate
+    val lut = Memo.checkpointCounted(q0
       .select(col("query_id"), expr(s"stack($PqM, $slices) AS (m, qm)"))
-      .join(broadcast(rcb), Seq("m"))
+      .join(rcb, Seq("m"))
       .select(col("query_id"), col("m"), col("code"),
-        expr(s"aggregate(zip_with(qm, rce, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), $fold)").as("term"))
+        expr(s"aggregate(zip_with(qm, rce, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), $fold)").as("term")))._1
     val codeStack = (0 until PqM).map(m => s"CAST($m AS BIGINT), code_$m").mkString(", ")
     val icu = memoIvfpqCodes(spark, dir)
       .select(col("vec_id"), col("centroid_id"),
         expr(s"stack($PqM, $codeStack) AS (m, code)"))
     def only(m: Int, c: Column) = sum(when(col("m") === m, c))
     icu.join(probes, Seq("centroid_id"))
-      .join(broadcast(lut), Seq("query_id", "m", "code"))
-      .join(broadcast(cellConsts), Seq("centroid_id", "m", "code"))
+      .join(lut, Seq("query_id", "m", "code"))
+      .join(cellConsts, Seq("centroid_id", "m", "code"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(max(col("qn")).as("qn"), max(col("qc")).as("qc"), max(col("cn")).as("cn"),
         only(0, col("term")).as("t0"), only(1, col("term")).as("t1"),
@@ -1187,7 +1177,7 @@ object Similarity {
         expr(s"aggregate(transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), $fold)").as("qn"))
     val codes = memoIvfpqCodes(spark, dir)
     val base = e.join(codes.select(col("vec_id"), col("centroid_id")), Seq("vec_id"))
-      .join(broadcast(cdf), Seq("centroid_id"))
+      .join(cdf, Seq("centroid_id"))
       .select(col("vec_id"), col("qn"),
         expr(s"aggregate(zip_with(embedding, cce, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), $fold)").as("qc"),
         expr(s"aggregate(transform(cce, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), $fold)").as("cn"))
@@ -1199,8 +1189,8 @@ object Similarity {
       expr(s"stack($PqM, $codeStack) AS (m, code)"))
     def only(m: Int, c: Column) = sum(when(col("m") === m, c))
     xm.join(cu, Seq("vec_id", "m"))
-      .join(broadcast(rcb), Seq("m", "code"))
-      .join(broadcast(cellConsts), Seq("centroid_id", "m", "code"))
+      .join(rcb, Seq("m", "code"))
+      .join(cellConsts, Seq("centroid_id", "m", "code"))
       .withColumn("term",
         expr(s"aggregate(zip_with(xm, rce, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), $fold)"))
       .groupBy(col("vec_id"))
@@ -1241,8 +1231,7 @@ object Similarity {
       fam("lsh", annLshShared(spark, dir, k)),
       fam("pq", pqAnnShared(spark, dir, k)))
       .reduce(_ unionByName _)
-      .crossJoin(broadcast(
-        truth.select(col("tq")).distinct().agg(count(lit(1)).as("query_ct"))))
+      .crossJoin(truth.select(col("tq")).distinct().agg(count(lit(1)).as("query_ct")))
       .select(col("family"), col("hit_total"), col("query_ct"),
         (col("hit_total").cast(DoubleType) /
           (col("query_ct") * k).cast(DoubleType)).as("recall"))

@@ -270,7 +270,7 @@ object TextAnalysis {
       .withColumn("r", col("n") % buckets)
     val rank = col("before") +
       row_number().over(Window.partitionBy(col("token_ct")).orderBy(col("doc_id"))).cast(LongType)
-    stats.join(broadcast(hist), Seq("token_ct"))
+    stats.join(hist, Seq("token_ct"))
       .withColumn("rank", rank)
       // closed-form ntile: first r buckets hold q+1 rows, the rest q
       // (greatest(q,1) keeps the dead branch well-defined when n < b)
@@ -369,8 +369,10 @@ object TextAnalysis {
     // corpus side stays a single uncached scan)
     val grams = memoGrams(spark, dir, n)
     val benchGrams = grams.filter(col("doc_id") % 20 === 0).select(col("gh")).distinct()
+    // a semi join: only the benchmark side can build, and the probe
+    // keeps the training grams' size estimate
     val hits = grams.filter(col("doc_id") % 20 =!= 0)
-      .join(broadcast(benchGrams), "gh")
+      .join(benchGrams, Seq("gh"), "left_semi")
       .groupBy(col("doc_id")).agg(countDistinct(col("gh")).as("hit_ct"))
     docs.filter(col("doc_id") % 20 =!= 0).select(col("doc_id"))
       .join(hits, Seq("doc_id"), "left")
@@ -431,7 +433,7 @@ object TextAnalysis {
     val bench = grams.filter(col("doc_id") % 20 === 0)
       .select(col("doc_id").as("bench_doc_id"), col("gh")).distinct()
     val hits = grams.filter(col("doc_id") % 20 =!= 0)
-      .join(broadcast(bench), "gh")
+      .join(bench, "gh")
       .groupBy(col("bench_doc_id"))
       .agg(countDistinct(col("doc_id")).as("leaked_to_ct"),
         countDistinct(col("gh")).as("leaked_gram_ct"))
@@ -604,7 +606,7 @@ object TextAnalysis {
       .orderBy(col("token_ct").desc, col("token")).limit(k)
       .withColumn("rk", row_number().over(
         Window.orderBy(col("token_ct").desc, col("token"))))
-      .crossJoin(broadcast(total))   // 1-row total, lazily
+      .crossJoin(total)   // 1-row total, lazily
       .withColumn("cum_share",
         sum(col("token_ct")).over(
           Window.orderBy(col("token_ct").desc, col("token"))
@@ -680,7 +682,7 @@ object TextAnalysis {
       .select(col("doc_id"), col("pii_ct"))
     val lm = Curation.lmSurprisalShared(spark, dir)
       .select(col("doc_id"), col("tok_ct"), col("surprisal_bits"))
-      .crossJoin(broadcast(Curation.lmTotalBits(spark, dir)))
+      .crossJoin(Curation.lmTotalBits(spark, dir))
       .withColumn("lm_gibberish",
         (col("surprisal_bits") * 10L > col("tbits") * 9L * col("tok_ct")).cast(LongType))
       .select(col("doc_id"), col("lm_gibberish"))
@@ -770,7 +772,7 @@ object TextAnalysis {
       .select(col("doc_id"), col("pii_ct"))
     val lm = Curation.lmScoreOn(docs, vocab, total)
       .select(col("doc_id"), col("tok_ct"), col("surprisal_bits"))
-      .crossJoin(broadcast(tbits))
+      .crossJoin(tbits)
       .withColumn("lm_gibberish",
         (col("surprisal_bits") * 10L > col("tbits") * 9L * col("tok_ct")).cast(LongType))
       .select(col("doc_id"), col("lm_gibberish"))

@@ -302,7 +302,7 @@ object ServeMain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val port = if (args.length > 1) args(1).toInt else 8070
-    val spark = graft.GraftSession.builder("local[4]", 4).getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val server = new QueryServer(spark, sfDir, port)
     args.drop(2).foreach { a =>

@@ -55,8 +55,9 @@ object AmplifyDecade {
     val src = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "/tmp/sf1eq"
     // own session (not TestSession's local[4]): amplification is one
-    // scan+write per table — IO-bound but wide; local[32] matches the
-    // bench profile and a plain `java -cp` run needs no scalatest
+    // scan+write per table — IO-bound but wide; the session's default
+    // core count (GraftSession.cpus) matches the bench profile and a
+    // plain `java -cp` run needs no scalatest
     val spark = GraftSession.get()
     amplify(spark, src, out)
     println(s"AMPLIFIED $src x$Copies -> $out")

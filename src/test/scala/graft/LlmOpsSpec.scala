@@ -712,6 +712,18 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(labels.nonEmpty && labels.forall { case (d, r) => want(d) == r })
   }
 
+  test("components conflict path: measured labels broadcast into the documents join") {
+    import spark.implicits._
+    // seedCap = 1 gives every edge its own seed set, so the sf0.001
+    // pairs take the conflict path: star phases, then the relabel join
+    val df = Dedup.dedupComponents(spark, sf, seedCap = 1)
+    val plan = df.queryExecution.sparkPlan
+    assert(plan.exists(_.nodeName == "BroadcastHashJoin") &&
+      !plan.exists(_.nodeName == "SortMergeJoin"), s"documents join must broadcast:\n$plan")
+    assert(df.as[(Long, Long)].collect().toMap ==
+      Dedup.dedupComponents(spark, sf).as[(Long, Long)].collect().toMap)
+  }
+
   test("quality scoring + filter stream ≡ batch (online curation gate)") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.OutputMode

@@ -274,6 +274,49 @@ class MemoSpec extends AnyFunSuite {
     }
   }
 
+  /** A 1,000-row aggregate over 200,000 rows: its origin plan
+    * estimates the 200,000-row input, the stored blocks hold 1,000, so
+    * the origin-estimate cap of [[org.apache.spark.sql.MeasuredLeaf]]
+    * does not apply. */
+  private def smallAggregate(name: String) = Memo(spark, MemoDir, name)(
+    spark.range(0, 200000).selectExpr("id % 1000 as k").groupBy("k").count())
+
+  test("a block-store memo leaf reports its stored rows and block bytes") {
+    try {
+      val df = smallAggregate("memospec_measured")
+      val stats = df.queryExecution.optimizedPlan.stats
+      assert(stats.rowCount.contains(BigInt(1000)))
+      val rdd = df.queryExecution.analyzed.collectLeaves().head
+        .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
+      // the status store is fed by listener events: wait until it has
+      // seen every stored partition before reading its byte total
+      def stored = spark.sparkContext.getRDDStorageInfo.find(_.id == rdd.id)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!stored.exists(_.numCachedPartitions == rdd.getNumPartitions) &&
+        System.nanoTime() < deadline) Thread.sleep(50)
+      val info = stored.get
+      assert(stats.sizeInBytes === BigInt(info.memSize + info.diskSize))
+      assert(stats.sizeInBytes < BigInt(200000))
+    } finally Memo.invalidate(spark, Some(MemoDir))
+  }
+
+  test("a small memo aggregate broadcasts into a larger join with no hint") {
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val session = spark.conf.get(threshold)
+    spark.conf.set(threshold, (1L << 20).toString)
+    try {
+      val small = smallAggregate("memospec_broadcast")
+      val big = spark.range(0, 300000).selectExpr("id % 1000 as k", "id as v")
+      val plan = big.join(small, "k").queryExecution.sparkPlan
+      assert(plan.collect { case j if j.nodeName == "BroadcastHashJoin" => j }.size === 1,
+        s"expected the memo side to broadcast:\n$plan")
+      assert(!plan.exists(_.nodeName == "SortMergeJoin"))
+    } finally {
+      spark.conf.set(threshold, session)
+      Memo.invalidate(spark, Some(MemoDir))
+    }
+  }
+
   test("heap guard policy: the measured 12 GB small-heap law is operational (SCALE.md memory finding)") {
     val gb = 1024L * 1024 * 1024
     // the measured-fatal shape: 12 GB heap / 32 task threads, any

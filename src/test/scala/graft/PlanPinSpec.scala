@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.window.WindowExec
@@ -78,22 +78,31 @@ class PlanPinSpec extends AnyFunSuite {
         "the sweep expands InMemoryTableScan into the cached plan")).toMap
 
   /** Every physical node reachable from `p`, INCLUDING the plans
-    * hidden inside memoized frames (`InMemoryTableScan` is a leaf —
-    * its `relation.cachedPlan` is the real operator tree the shipped
-    * path executes the first time) and inside AQE wrappers. Without
-    * this, `Memo`-shared frames (the flagship wide join, the shared
-    * token explode, ...) would be plan-pin blind spots. Each distinct
-    * cached plan expands ONCE (nested memos reference each other; a
-    * per-reference re-expansion would blow up combinatorially on the
-    * flagship's envelope+dim memo stack). */
+    * hidden inside memoized frames and inside AQE wrappers. A `Memo`
+    * checkpoint is an `RDDScan` leaf; the plan that built it is kept
+    * by [[operators.Memo.buildPlans]] and planned here. A cached
+    * frame's `InMemoryTableScan` leaf carries its `relation.cachedPlan`.
+    * Without this, memo-shared frames (the flagship wide join, the
+    * shared token explode, ...) would be plan-pin blind spots. Each
+    * distinct build or cached plan expands ONCE (nested memos
+    * reference each other; a per-reference re-expansion would blow up
+    * combinatorially on the flagship's envelope+dim memo stack). */
   private def expand(p: SparkPlan): Seq[SparkPlan] = {
+    val builds = operators.Memo.buildPlans(spark).map { case (frame, plan) =>
+      frame.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd.id -> plan
+    }.toMap
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     // reference-identity set (identityHashCode alone can collide,
     // which would silently skip a distinct cached plan — a blind spot
     // in the very sweep meant to remove blind spots)
     val seen = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
     def go(p: SparkPlan): Seq[SparkPlan] =
       p.collectWithSubqueries { case n => n }.flatMap {
+        case r: RDDScanExec if builds.contains(r.rdd.id) =>
+          val plan = builds(r.rdd.id)
+          if (seen.add(plan)) r +: go(session.sessionState.executePlan(plan).sparkPlan)
+          else Seq(r)
         case im: InMemoryTableScanExec =>
           if (seen.add(im.relation.cachedPlan)) im +: go(im.relation.cachedPlan)
           else Seq(im)
