@@ -206,10 +206,9 @@ object Dedup {
     * of a real corpus) never enter it — they are their own rep by
     * definition and are glued back with one left join at the end, so
     * the cost scales with the near-dup graph, not the corpus. */
-  def dedupComponents(spark: SparkSession, dir: String, seedCap: Int = SeedCap): DataFrame =
+  def dedupComponents(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir).select(col("doc_id"))
-      .join(componentLabels(verifiedPairs(spark, dir), seedCap = seedCap)
-          .withColumnRenamed("rep_doc_id", "rep"),
+      .join(componentLabels(verifiedPairs(spark, dir)).withColumnRenamed("rep_doc_id", "rep"),
         Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("rep"), col("doc_id")).as("rep_doc_id"))
       .orderBy(col("doc_id"))

@@ -167,11 +167,9 @@ object GmallAds {
     * lineage too. Same r17 union-tagged single-aggregation shape as
     * [[trademarkStats]]. */
   def trademarkStatsCdc(s: SparkSession, d: String): DataFrame = {
-    // checkpointed: both sides read it, and the name map then plans
-    // against its measured size, not the CDC join chain's estimate
-    val u = Memo.checkpointCounted(orderRefundUnion(
+    val u = orderRefundUnion(
       withDt(GmallDws.tradeTmCatUserSpuOrderCdc(s, d)),
-      withDt(GmallDws.tradeTmCatUserRefundCdc(s, d))))._1
+      withDt(GmallDws.tradeTmCatUserRefundCdc(s, d)))
     orderRefundByKey(u, Seq("trademark_id"))
       .join(sideNameMap(u, Seq("trademark_id"), Seq("trademark_name")), Seq("trademark_id"))
       .select(

