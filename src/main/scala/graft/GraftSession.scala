@@ -16,6 +16,22 @@ import org.apache.spark.sql.SparkSession
   * the test session. Batch shuffles run under AQE and start at
   * `initialPartitionNum`, 32 unless `SPARK_GRAFT_INITIAL_PARTITIONS`
   * is set, before coalescing, whatever `shufflePartitions` says.
+  *
+  * `file:` is the engine's own ([[graft.sources.ForkFreeLocalFileSystem]]
+  * for `FileSystem`, [[graft.sources.ForkFreeLocalFs]] for `FileContext`).
+  * Without Hadoop's native library the stock local filesystem forks
+  * `chmod` on every create and `mkdirs` and `readlink` on every
+  * `FileContext` rename: about a thousand child processes in an
+  * 8-second streaming run, from the offset, commit and state-store
+  * files and every `AdsStore` or `PARQUET` memo commit. The override
+  * sets permissions through `java.nio` and skips `readlink` for paths
+  * that are not symlinks. The rest stays Hadoop's: `.crc` checksums,
+  * rename semantics (`Rename.NONE` still refuses an existing
+  * destination), symlinks and the sticky bit. Hadoop caches one
+  * `FileSystem` per scheme and user for the whole JVM, whatever the
+  * conf, so a `file:` instance created before this session's conf
+  * (outside `GraftSession`) stays the stock class; `FileContext` is
+  * resolved afresh per call.
   */
 object GraftSession {
   /** Local task threads: `SPARK_GRAFT_CPUS`, else the host's cores. The
@@ -77,6 +93,8 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.sources.ForkFreeLocalFs].getName)
     // Memo backend override (a StorageLevel name or PARQUET) for
     // single-JVM deployments whose memo surface × task concurrency
     // exceeds heap — see graft.operators.Memo.HeapGuardConf for the

@@ -1,7 +1,11 @@
 package graft.serving
 
+import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Versioned parquet publication for foreachBatch-maintained ADS
   * stores — the streaming-deployment store discipline behind
@@ -20,8 +24,47 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * right trade; `keep` bounds disk at two versions (the newest plus
   * one for reads in flight), pruned only after the new version's
   * `_SUCCESS` exists.
+  *
+  * In-process handoff: `publish` collects the frame once (the bound
+  * above is what makes that driver-safe), writes the version from
+  * those rows as one parquet file and, once the rename has committed
+  * it, keeps the rows keyed by (qualified root, version). A
+  * [[readVersion]] or [[read]] of such a version in the same JVM is a
+  * local relation over those rows, with the schema a parquet read
+  * reports (every field nullable): no file listing, no footer job, no
+  * scan, so a streaming leg's merge of the stored frame and the
+  * server's load of a new version run no Spark job. At most `keep`
+  * versions per root are kept, dropped with their directories by the
+  * prune. Any other process, and this JVM for a root it did not
+  * publish, reads the parquet as before; the directory stays the
+  * store of record.
   */
 object AdsStore {
+
+  /** Versions this JVM committed: (qualified root, version) → (schema
+    * as a parquet read reports it, rows). */
+  private val published = TrieMap[(String, Long), (StructType, Array[Row])]()
+
+  /** Test probe: the versions of `root` held in process, ascending. */
+  private[graft] def inProcessVersions(spark: SparkSession, root: String): Seq[Long] = {
+    val q = qualified(spark, root)
+    published.keys.collect { case (r, n) if r == q => n }.toSeq.sorted
+  }
+
+  /** `t` with every field, element and value nullable, as a file
+    * source reads it back. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  private def qualified(spark: SparkSession, root: String): String = {
+    val p = new Path(root)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p).toString
+  }
 
   /** Bound on how many successive version candidates a publisher will
     * try to claim before failing loudly — only reachable when MANY
@@ -78,6 +121,8 @@ object AdsStore {
     val spark = df.sparkSession
     val p = new Path(root)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val qroot = fs.makeQualified(p).toString
+    val rows = df.collect()
     fs.mkdirs(p)
     val committed = versions(spark, root)
     val start = committed.lastOption match {
@@ -92,7 +137,8 @@ object AdsStore {
           "of concurrent publishers is racing this root"))
     val tmp = new Path(p, s"v=$v.tmp.${ProcessHandle.current().pid()}." +
       Thread.currentThread().getId)
-    df.write.mode("overwrite").parquet(tmp.toString)
+    spark.createDataFrame(rows.toSeq.asJava, df.schema).coalesce(1)
+      .write.mode("overwrite").parquet(tmp.toString)
     // Rename.NONE semantics (throws if the destination exists — the
     // claim made a duplicate impossible, so a throw here is a real
     // protocol violation worth failing loudly on, not a silent
@@ -100,6 +146,7 @@ object AdsStore {
     org.apache.hadoop.fs.FileContext
       .getFileContext(p.toUri, spark.sparkContext.hadoopConfiguration)
       .rename(tmp, new Path(p, s"v=$v"))
+    published.put((qroot, v), (nullable(df.schema).asInstanceOf[StructType], rows))
     // prune strictly below the keep horizon (committed versions only
     // define the horizon; the just-written v is committed by now).
     // The committed set is SNAPSHOT once before any deletion so a
@@ -141,6 +188,7 @@ object AdsStore {
         now - s.getModificationTime > ClaimGraceMs
       if (prunable || orphanTmp) fs.delete(s.getPath, true)
     }
+    published.filterInPlace { case ((r, n), _) => r != qroot || n >= keepMin }
     v
   }
 
@@ -206,9 +254,13 @@ object AdsStore {
     versions(spark, root).lastOption
 
   /** One committed version's frame — the `v=` directory layout stays
-    * private to this class. */
+    * private to this class. A version this JVM published is served
+    * from its rows (see the handoff above). */
   def readVersion(spark: SparkSession, root: String, version: Long): DataFrame =
-    spark.read.parquet(s"$root/v=$version")
+    published.get((qualified(spark, root), version)) match {
+      case Some((schema, rows)) => spark.createDataFrame(rows.toSeq.asJava, schema)
+      case None => spark.read.parquet(s"$root/v=$version")
+    }
 
   /** The newest committed version's frame, with its version number —
     * None until the first publish commits. */

@@ -115,8 +115,9 @@ final class QueryServer(spark: SparkSession, sfDir: String, port: Int = 0) {
 
   private def loadStore(kind: String, name: String, root: String,
                         limit: Option[Int]): (Array[String], Array[Row]) =
-    // version-only resolution per request (one listing); the parquet
+    // version-only resolution per request (one listing); the store
     // read + collect happen only on a cache miss for a NEW version
+    // (no Spark job when this JVM published it: AdsStore's handoff)
     AdsStore.latestVersion(spark, root) match {
       case Some(v) =>
         // root-scoped key: re-binding the name to a different store
@@ -275,9 +276,11 @@ final class QueryServer(spark: SparkSession, sfDir: String, port: Int = 0) {
   /** Stop serving and join every thread this server started, so no
     * handler or prefetch job outlives it (a build finishing after a
     * caller's `Memo.invalidate` would re-insert a stale frame). A
-    * prefetch between two jobs starts its next one after a cancel, so
-    * the cancel repeats until its thread has ended; an idle prefetcher
-    * ends at once and cancels nothing. */
+    * prefetch's job can start after a cancel (its next query, or a
+    * broadcast its cancelled query queued on Spark's own threads, which
+    * outlives the prefetch thread), so the cancel also refuses the
+    * group's future jobs, and repeats until the thread has ended; an
+    * idle prefetcher ends at once and cancels nothing. */
   def stop(): Unit = {
     server.stop(0)
     val threads = synchronized { stopped = true; prefetchers }
@@ -285,7 +288,7 @@ final class QueryServer(spark: SparkSession, sfDir: String, port: Int = 0) {
     threads.foreach { t =>
       t.join(100)
       while (t.isAlive) {
-        spark.sparkContext.cancelJobGroup(prefetchGroup)
+        spark.sparkContext.cancelJobGroupAndFutureJobs(prefetchGroup)
         t.join(100)
       }
     }

@@ -1,10 +1,13 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Shuffle-budget pins for representative heavy queries: the number of
   * `ShuffleExchangeExec` nodes each query plans must not grow — every
@@ -14,16 +17,41 @@ import org.scalatest.funsuite.AnyFunSuite
   * invisible to the correctness gate.
   *
   * Counted on the prepared `executedPlan`, through AQE wrappers and
-  * into memoized (`InMemoryRelation`) interiors — the cold-build cost
-  * of the query. Pinned as an UPPER bound that is exact on a cold
-  * session: once a shared frame materializes, its output partitioning
-  * is known and EnsureRequirements legitimately skips downstream
-  * exchanges (the warm-cache benefit), so a query planned after its
-  * memo executed can count lower — never higher. Any growth is a
-  * conscious, reviewed decision.
+  * into cached (`InMemoryRelation`) interiors, plus every checkpoint
+  * the query builds: its `Memo` frames and loop phases are
+  * `localCheckpoint`s, whose plans are gone from the consumer's tree,
+  * so a listener collects them as `PlanPinSpec` does. Each test drops
+  * every memo first, so the count is the query's cold build from
+  * parquet whatever ran before it. Pinned as an UPPER bound; any
+  * growth is a conscious, reviewed decision.
   */
-class ShufflePinSpec extends AnyFunSuite {
+class ShufflePinSpec extends AnyFunSuite with BeforeAndAfterAll {
   import TestSession._
+
+  /** The checkpoint builds (`localCheckpoint` executions) since the
+    * last [[drainBuilds]]. */
+  private val builds = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+  private val buildListener = new QueryExecutionListener {
+    def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      if (funcName == "localCheckpoint") builds.add(qe)
+    def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+  }
+
+  override def beforeAll(): Unit = spark.listenerManager.register(buildListener)
+
+  override def afterAll(): Unit = spark.listenerManager.unregister(buildListener)
+
+  /** The executed plans of the checkpoints built since the last call
+    * (listener events are asynchronous; `listenerBus.waitUntilEmpty`
+    * is public in bytecode). */
+  private def drainBuilds(): Seq[SparkPlan] = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    val qes = builds.asScala.toList
+    builds.clear()
+    qes.map(_.executedPlan)
+  }
 
   /** name → planned ShuffleExchangeExec count (-1 = discovery mode:
     * print the actual and pass). */
@@ -34,14 +62,12 @@ class ShufflePinSpec extends AnyFunSuite {
     "j7_full_outer_join" -> 3,     // full outer on pre-agged sides
     "dwd_trade_order_detail" -> 31, // cold build: envelope memo + dim memos + wide join
     "dws_trade_order_window" -> 6,
-    "ads_trademark_stats" -> 12,
-    "ads_category_stats" -> 12,
-    "dedup_minhash_lsh" -> 7,
-    "dedup_components" -> 4,       // per-iteration joins hide behind localCheckpoint
-    "sim_ann_ivf" -> 4,
-    "search_bm25_topk" -> 10,  // +1: the workload-sized distinct that
-                               // restricts tdf to query terms before
-                               // its broadcast (r13 vocab-hint fix)
+    "ads_trademark_stats" -> 9,    // 4 in the query + 5 in its 3 DWS memo builds
+    "ads_category_stats" -> 9,     // likewise
+    "dedup_minhash_lsh" -> 5,
+    "dedup_components" -> 6,       // 1 in the query + 5 in its 3 loop/seed checkpoints
+    "sim_ann_ivf" -> 4,            // its k-means collects are driver-loop actions, not builds
+    "search_bm25_topk" -> 9,       // 3 in the query + 6 in its 5 checkpoint builds
     "text_token_ids" -> 11,        // three-level rank decomposition, shared token explode
     "text_pack_shards" -> 10,      // two prefix-sum levels + memoized token counts
     "mm_phash_neardup" -> 6,
@@ -50,14 +76,11 @@ class ShufflePinSpec extends AnyFunSuite {
   /** Exchanges are inserted by plan preparation (EnsureRequirements),
     * so they exist only in `executedPlan` — under AQE that is an
     * `AdaptiveSparkPlanExec` whose initial tree hangs off `inputPlan`.
-    * InMemoryTableScan IS expanded (most queries memoize their shared
-    * frames, some memoize the whole query — the interior is the plan
-    * that actually executes on first build), so the pin is the cost
-    * of computing the query from cold parquet. Each distinct cached
-    * plan counts ONCE no matter how many scans reference it (`seen`
-    * below) — matching physical reality: a persisted frame
-    * materializes a single time per session. */
-  private def countShuffles(root: SparkPlan): Int = {
+    * The roots are the query's plan and its checkpoint builds; an
+    * InMemoryTableScan (the few `.cache()`d intermediates) is expanded
+    * into the plan that fills it, once per distinct cached plan
+    * (`seen` below), since a persisted frame materializes once. */
+  private def countShuffles(roots: Seq[SparkPlan]): Int = {
     // each cached plan counts ONCE no matter how many scans reference
     // it — that is what executes (a persisted frame materializes a
     // single time per session); per-reference re-expansion would let
@@ -80,13 +103,15 @@ class ShufflePinSpec extends AnyFunSuite {
           else 0
         case _: ShuffleExchangeExec => 1
       }.sum
-    go(root)
+    roots.map(go).sum
   }
 
   pins.toSeq.sortBy(_._1).foreach { case (name, pinned) =>
     test(s"shuffle pin: $name") {
+      operators.Memo.invalidate(spark, None)
+      drainBuilds()
       val df = SparkEntry.queries(name)(spark, sf)
-      val n = countShuffles(df.queryExecution.executedPlan)
+      val n = countShuffles(df.queryExecution.executedPlan +: drainBuilds())
       if (pinned < 0) info(s"DISCOVERY $name shuffles=$n")
       else assert(n <= pinned,
         s"$name plans $n shuffle exchanges, pinned $pinned — every extra " +
