@@ -37,7 +37,7 @@ object Bench {
     * same way), so plain reflection reaches them with no setAccessible.
     * Falls back to a fixed sleep if Spark ever renames them; either
     * path is outside the timed windows. */
-  private def drain(sc: org.apache.spark.SparkContext): Unit =
+  private[graft] def drain(sc: org.apache.spark.SparkContext): Unit =
     try {
       val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
       bus.getClass.getMethod("waitUntilEmpty").invoke(bus)

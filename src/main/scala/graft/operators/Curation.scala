@@ -471,6 +471,14 @@ object Curation {
     Memo(spark, dir, "curation.tokens")(
       tokensOf(Tables.spread(spark, Tables.documents(spark, dir))))
 
+  /** The corpus vocabulary `(token, token_ct, doc_ct)` over
+    * [[tokensShared]], memoized per (session, dir): the vocabulary
+    * report, spell correction and PMI read one aggregation. */
+  private[operators] def vocabShared(spark: SparkSession, dir: String): DataFrame =
+    Memo(spark, dir, "curation.vocab")(
+      tokensShared(spark, dir).groupBy(col("token"))
+        .agg(count(lit(1)).as("token_ct"), countDistinct(col("doc_id")).as("doc_ct")))
+
   /** Unigram LM over a positioned-token frame: (vocab counts, 1-row
     * total) — the static side of at-ingest scoring. */
   private[graft] def lmModelTokens(toks: DataFrame): (DataFrame, DataFrame) = {
@@ -808,7 +816,7 @@ object Curation {
       val Array(a, b) = top.getString(0).split(" ", 2)
       out += ((r.toLong, a, b, a + b, top.getLong(1)))
       cur = bpeApplyMerge(cur, a, b)
-      if (r % checkpointEvery == 0) cur = cur.localCheckpoint()
+      if (r % checkpointEvery == 0) cur = Memo.checkpointCounted(cur)._1
     }
     spark.createDataFrame(out.toSeq)
       .toDF("round", "p1", "p2", "merged", "pair_ct")
@@ -862,7 +870,7 @@ object Curation {
       // same lineage cap as the induction loop — the application side
       // of a 32k-merge table is a 32k-deep replace chain otherwise
       // (parameterized so CurationSpec can force the cadence)
-      if ((i + 1) % checkpointEvery == 0) vocab = vocab.localCheckpoint()
+      if ((i + 1) % checkpointEvery == 0) vocab = Memo.checkpointCounted(vocab)._1
     }
     vocab
       .withColumn("pieces", trim(col("syms")))

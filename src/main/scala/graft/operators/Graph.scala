@@ -79,7 +79,7 @@ object Graph {
     // on a billion-edge graph this is still the right call — it is the
     // same materialize-the-loop-invariant discipline as the components
     // rounds, trading one write for iters× recomputation.
-    val e = edges.localCheckpoint()
+    val e = Memo.checkpointCounted(edges)._1
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst"))).distinct()
     val n = nodes.agg(count(lit(1)).as("n"))
@@ -94,7 +94,7 @@ object Graph {
         .select(col("node"),
           (lit(Teleport.toDouble) / col("n") +
             lit(Damping.toDouble) * coalesce(col("s"), lit(0.0))).as("pagerank"))
-      if (i % 4 == 0 && i < iters) ranks = ranks.localCheckpoint()
+      if (i % 4 == 0 && i < iters) ranks = Memo.checkpointCounted(ranks)._1
     }
     ranks
   }

@@ -30,7 +30,9 @@ private[graft] object Memo {
     * job that counts its rows and the rows matching `where` (an eager
     * checkpoint runs its own count and throws the value away). Returns
     * the leaf with measured statistics ([[MeasuredLeaf]]) and the
-    * `where` count, so a loop tests convergence at no extra action. */
+    * `where` count, so a loop tests convergence at no extra action.
+    * The engine's one eager-checkpoint form: loop phases and frames a
+    * query reads twice come through here too. */
   private[graft] def checkpointCounted(df: DataFrame, where: Column = lit(true),
       level: StorageLevel = StorageLevel.MEMORY_AND_DISK): (DataFrame, Long) = {
     val ck = df.localCheckpoint(false, level)

@@ -335,10 +335,8 @@ object Search {
     * distance runs, so the DP cost is (probes × band), never
     * (probes × vocabulary); band keys broadcast. */
   def didYouMean(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    val vocab = Memo(spark, dir, "search.vocab.ct")(
-      Tables.spread(spark, Tables.documents(spark, dir))
-        .select(explode(Curation.tokensCol).as("word"))
-        .groupBy(col("word")).agg(count(lit(1)).as("word_ct")))
+    val vocab = Curation.vocabShared(spark, dir)
+      .select(col("token").as("word"), col("token_ct").as("word_ct"))
     // probes: the 5 most frequent words, each misspelled two ways —
     // drop the 2nd char; replace the 1st char with 'q'
     val seeds = vocab.orderBy(col("word_ct").desc, col("word")).limit(5)
@@ -399,28 +397,25 @@ object Search {
     // recomputations (measured 55 s at sf0.1; 0.6 s materialized).
     // Both frames are pool-bounded (≤queries·pool and ≤queries·pool²
     // rows at ANY corpus size), so the checkpoint cost is constant.
-    val rel = pool
+    val rel = Memo.checkpointCounted(pool
       .withColumn("rel", col("score_fp").cast(DoubleType) /
         max(col("score_fp")).over(Window.partitionBy(col("qid"))).cast(DoubleType))
-      .select(col("qid"), col("doc_id"), col("rel"))
-      .localCheckpoint()
-    val sims = pool
+      .select(col("qid"), col("doc_id"), col("rel")))._1
+    val sims = Memo.checkpointCounted(pool
       .select(col("qid"), col("doc_id").as("da"), col("q").as("qa"), col("nrm").as("na"))
       .join(pool.select(col("qid"), col("doc_id").as("db"), col("q").as("qb"),
         col("nrm").as("nb")), Seq("qid"))
       .filter(col("da") =!= col("db"))
       .select(col("qid"), col("da"), col("db"),
         (GraftExpressions.dotLong(col("qa"), col("qb")).cast(DoubleType) /
-          (sqrt(col("na").cast(DoubleType)) * sqrt(col("nb").cast(DoubleType)))).as("sim"))
-      .localCheckpoint()
+          (sqrt(col("na").cast(DoubleType)) * sqrt(col("nb").cast(DoubleType)))).as("sim")))._1
     // step 1: pure relevance argmax (empty selected set ⇒ zero penalty)
-    var selected = rel
+    var selected = Memo.checkpointCounted(rel
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("qid")).orderBy(col("rel").desc, col("doc_id"))))
       .filter(col("rn") === 1)
       .select(col("qid"), col("doc_id"), lit(1).as("step"),
-        (lit(0.7) * col("rel")).as("mmr"))
-      .localCheckpoint()
+        (lit(0.7) * col("rel")).as("mmr")))._1
     for (i <- 2 to MmrK) {
       val pen = sims
         .join(selected.select(col("qid").as("sqid"), col("doc_id").as("sel_id")),
@@ -436,7 +431,7 @@ object Search {
         .select(col("qid"), col("doc_id"), lit(i).as("step"), col("mmr"))
       // truncate per stage: selected_i's plan otherwise nests every
       // previous stage's windows and joins
-      selected = selected.unionByName(pick).localCheckpoint()
+      selected = Memo.checkpointCounted(selected.unionByName(pick))._1
     }
     selected
       .select(col("qid"), col("step").cast(LongType).as("step"),
@@ -451,20 +446,18 @@ object Search {
     * of [[Curation.bpeMerges]]' raw-count rule). min-support 5, top 50
     * by (pmi DESC, bigram).
     *
-    * Scale shape: two corpus scans (unigram + the memoized bigram
-    * frame), both map-side-combined aggregations sized by vocabulary /
-    * vocabulary²-observed; the scoring join is vocabulary-keyed; the
-    * top-k is `orderBy().limit()` = TakeOrderedAndProject, never a
-    * global rank window. Determinism: the probability ratio is one
-    * fixed-order product/quotient of exact counts, and the ln is the
-    * shared iterated-sqrt [[detLn]] — bit-identical in DuckDB. */
+    * Scale shape: two memoized frames (the shared vocabulary and the
+    * bigram counts), both map-side-combined aggregations sized by
+    * vocabulary / vocabulary²-observed; the scoring join is
+    * vocabulary-keyed; the top-k is `orderBy().limit()` =
+    * TakeOrderedAndProject, never a global rank window. Determinism:
+    * the probability ratio is one fixed-order product/quotient of exact
+    * counts, and the ln is the shared iterated-sqrt [[detLn]] —
+    * bit-identical in DuckDB. */
   def pmiPairs(spark: SparkSession, dir: String,
                minCount: Long = 5, k: Int = 50): DataFrame = {
     val bg = bigramCounts(spark, dir)
-    val toks = Memo(spark, dir, "search.unigram.ct")(
-      Tables.spread(spark, Tables.documents(spark, dir))
-        .select(explode(Curation.tokensCol).as("token"))
-        .groupBy(col("token")).agg(count(lit(1)).as("token_ct")))
+    val toks = Curation.vocabShared(spark, dir)
     val nTok = toks.agg(sum(col("token_ct")).as("n_tok"))
     val nBg = bg.agg(sum(col("bigram_ct")).as("n_bg"))
     bg.filter(col("bigram_ct") >= minCount)

@@ -128,19 +128,16 @@ object Similarity {
       .select(col("vec_a"), col("vec_b"), col("sim"))
   }
 
-  // The named wrappers Memo the UNSORTED core and sort from the cache:
-  // the candidate verify (integer dot per candidate pair) is narrow
-  // compute after the distinct's shuffle, and a global orderBy over it
-  // would run it TWICE — the range partitioner samples its child to
-  // pick bounds (the editDistancePairs lesson). Sorting the memoized
-  // frame samples cached rows, so the verify runs once.
+  // The named wrappers checkpoint the UNSORTED core per call and sort
+  // the checkpoint: the candidate verify (integer dot per candidate
+  // pair) is narrow compute after the distinct's shuffle, and a global
+  // orderBy over it would run it TWICE — the range partitioner samples
+  // its child to pick bounds (the editDistancePairs lesson). Sorting
+  // the checkpoint samples stored rows, so the verify runs once, inside
+  // the call that asked for it; no session cache holds the result.
   def nearDupLsh(spark: SparkSession, dir: String, threshold: Double = 0.3): DataFrame =
-    // per-call checkpoint (r18, replacing a cross-run memo of the named
-    // query's own output): the verify still runs exactly once per
-    // action — the sort samples the checkpointed rows — but it runs,
-    // and is measured, inside the action that asked for it
-    nearDupCore(Tables.spread(spark, Tables.embeddings(spark, dir)), threshold, radius = 2)
-      .localCheckpoint()
+    Memo.checkpointCounted(
+      nearDupCore(Tables.spread(spark, Tables.embeddings(spark, dir)), threshold, radius = 2))._1
       .orderBy(col("vec_a"), col("vec_b"))
 
   /** Planted vec_ids live at original id + this offset. */
@@ -164,9 +161,8 @@ object Similarity {
     // pairs miss in ALL tables — per-pair plane agreement correlates
     // across the fixed plane set), Hamming-1 probes lift it to 0.990
     // for ~40% more candidate rows
-    // per-call checkpoint — same reasoning as [[nearDupLsh]] (r18)
-    nearDupCore(plantedCorpus(spark, dir), threshold = 0.9, radius = 1)
-      .localCheckpoint()
+    // per-call checkpoint — same reasoning as [[nearDupLsh]]
+    Memo.checkpointCounted(nearDupCore(plantedCorpus(spark, dir), threshold = 0.9, radius = 1))._1
       .orderBy(col("vec_a"), col("vec_b"))
 
   val NumTables = 12
@@ -209,13 +205,6 @@ object Similarity {
     * dot products run in one fused codegen pass (HyperplaneBuckets). */
   private lazy val lshPlanes: Array[Array[Double]] =
     Array.tabulate(NumTables * PlanesPerTable, 64)((p, j) => planeComponent(p, j))
-
-  def lshBucketsOn(e: DataFrame): DataFrame = {
-    val withB = e.select(col("vec_id"), col("embedding"),
-      GraftExpressions.hyperplaneBuckets(col("embedding"), lshPlanes, PlanesPerTable).as("b"))
-    val tableCols = (0 until NumTables).map(t => col("b").getItem(t).as(s"bucket_$t"))
-    withB.select(col("vec_id") +: col("embedding") +: tableCols: _*)
-  }
 
   /** One (vec_id, t, bucket) row per table, from ONE signature pass:
     * the fused HyperplaneBuckets expression evaluates once per vector

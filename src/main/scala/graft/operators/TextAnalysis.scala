@@ -31,8 +31,8 @@ object TextAnalysis {
     * Memoized per (session, dir): tokenize-and-score is the dominant
     * cost of every consumer, and four named queries build on this frame
     * (`text_stats`, `text_quality_filter`, `text_quality_deciles`,
-    * `text_source_quality`) — one persisted pass serves them all, and
-    * `Memo.invalidate` owns the lifecycle (no orphaned `.cache()`). */
+    * `text_source_quality`) — one materialized pass serves them all,
+    * and `Memo.invalidate` frees it. */
   def textStats(spark: SparkSession, dir: String): DataFrame =
     Memo(spark, dir, "text.stats")(
       textStatsOn(Tables.spread(spark, Tables.documents(spark, dir)))
@@ -448,8 +448,8 @@ object TextAnalysis {
 
   /** The corpus gram-hash frame behind both decontamination paths,
     * memoized per (session, dir, n) — exact and Bloom variants read
-    * the identical projection, so it materializes once and Memo owns
-    * the unpersist (ADVICE r7: no orphaned `.cache()`). */
+    * the identical projection, so it materializes once and
+    * `Memo.invalidate` frees it. */
   private def memoGrams(spark: SparkSession, dir: String, n: Int): DataFrame =
     Memo(spark, dir, s"text.grams.$n")(
       gramHashes(Tables.spread(spark, Tables.documents(spark, dir))
@@ -589,13 +589,9 @@ object TextAnalysis {
     * top-k + k-row merge), so only the k winners reach the ranking and
     * cumulative windows — never the full vocabulary. */
   def vocabTopK(spark: SparkSession, dir: String, k: Int = 100): DataFrame = {
-    val tok = Tables.spread(spark, Tables.documents(spark, dir))
-      .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("token"))
-    // cached: both the grand total and the top-k read this frame, and
-    // uncached each would re-run the explode + two-level aggregation
-    val counts = tok.groupBy(col("token"))
-      .agg(count(lit(1)).as("token_ct"), countDistinct(col("doc_id")).as("doc_ct"))
-      .cache()
+    // the shared vocabulary memo: the grand total and the top-k both
+    // read one materialized aggregation
+    val counts = Curation.vocabShared(spark, dir)
     val total = counts.agg(sum(col("token_ct")).as("total_ct"))
     import org.apache.spark.sql.expressions.Window
     // top-k via sort+limit = TakeOrderedAndProject (per-partition top-k,

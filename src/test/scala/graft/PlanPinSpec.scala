@@ -1,13 +1,10 @@
 package graft
 
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.window.WindowExec
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import scala.jdk.CollectionConverters._
 
 /** Plan-shape regression protection for EVERY named query (r9 ask #6,
   * r10 verdict #2): one dynamically-registered test per
@@ -28,7 +25,10 @@ import scala.jdk.CollectionConverters._
   *     which is a single-machine bottleneck at 100 TB unless the
   *     windowed frame is provably bounded (sort+limit upstream, a
   *     model-/vocabulary-sized frame, …). Bounded cases must be
-  *     allowlisted with their bound documented.
+  *     allowlisted with their bound documented;
+  *   - no cached relation: the query plans no `InMemoryTableScan`, and
+  *     building it leaves the CacheManager empty — shared work lives
+  *     in `Memo`, which the CacheManager never sees.
   *
   * BroadcastNestedLoopJoin is allowed: the engine's 1-row scalar
   * attaches (corpus stats, decile cuts, model frames) plan as BNLJ by
@@ -37,39 +37,23 @@ import scala.jdk.CollectionConverters._
 class PlanPinSpec extends AnyFunSuite with BeforeAndAfterAll {
   import TestSession._
 
-  /** The checkpoints the running query builds. A checkpoint leaf (a
-    * `Memo` frame, a loop phase, a measured intermediate) is an
-    * `RDDScan` whose plan is gone from the consumer's tree; each
-    * `localCheckpoint` runs as its own SQL execution, which this
-    * listener reports with the plan that built it. */
-  private val builds = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
-  private val buildListener = new QueryExecutionListener {
-    def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-      if (funcName == "localCheckpoint") builds.add(qe)
-    def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-  }
+  /** The checkpoints the running query builds. */
+  private val builds = new CheckpointBuilds(spark)
+
+  private def cacheManager =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
 
   // every memo builds again while the listener is registered, so each
   // build is swept once, under the first query (in name order) that
-  // reads it
+  // reads it; earlier suites' caches are dropped so the empty-cache
+  // pin sees only what these queries leave behind
   override def beforeAll(): Unit = {
     operators.Memo.invalidate(spark, None)
-    spark.listenerManager.register(buildListener)
+    cacheManager.clearCache()
+    spark.listenerManager.register(builds)
   }
 
-  override def afterAll(): Unit = spark.listenerManager.unregister(buildListener)
-
-  /** The checkpoint plans built since the last call. Listener events
-    * are delivered asynchronously; `listenerBus.waitUntilEmpty` is
-    * public in bytecode. */
-  private def drainBuilds(): Seq[SparkPlan] = {
-    val sc = spark.sparkContext
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    val qes = builds.asScala.toList
-    builds.clear()
-    qes.map(_.sparkPlan)
-  }
+  override def afterAll(): Unit = spark.listenerManager.unregister(builds)
 
   /** EMPTY since r14: the last allowlisted cartesian
     * (`sim_neardup_pairs`' all-pairs oracle baseline) is retired — its
@@ -115,33 +99,21 @@ class PlanPinSpec extends AnyFunSuite with BeforeAndAfterAll {
         "level-1 block ids ARE the dense doc ids, so the residue is " +
         "docs/4096^2 rows — a uniform fanout would leave one block per doc " +
         "(theta(corpus) residue, the r13 review catch)")) ++
-    Seq("search_workload", "search_bm25_topk", "search_phrase",
-      "search_hybrid_rerank", "search_snippets", "search_related_queries").map(_ ->
+    Seq("search_bm25_topk", "search_phrase").map(_ ->
       ("the memoized workload-spec builder's rank windows run AFTER " +
         "orderBy().limit(maxRank) / limit(2) — frames are bounded by the " +
         "workload geometry (slot count), not the corpus; visible here because " +
-        "the sweep expands InMemoryTableScan into the cached plan")).toMap
+        "these are the first queries in name order to build the query and " +
+        "phrase workload memos")).toMap
 
   /** Every physical node reachable from `roots` (a query's plan and
-    * the checkpoint builds it ran, see [[builds]]), INCLUDING the plans
-    * hidden inside cached frames (`InMemoryTableScan` is a leaf — its
-    * `relation.cachedPlan` is the real operator tree the shipped path
-    * executes the first time) and inside AQE wrappers. Without this,
-    * shared frames (the flagship wide join, the shared token explode,
-    * ...) would be plan-pin blind spots. Each distinct cached plan
-    * expands ONCE (nested frames reference each other; a per-reference
-    * re-expansion would blow up combinatorially). */
+    * the checkpoint builds it ran, see [[builds]]), including those
+    * inside AQE wrappers. Without the builds, shared frames (the
+    * flagship wide join, the shared token explode, ...) would be
+    * plan-pin blind spots. */
   private def expand(roots: Seq[SparkPlan]): Seq[SparkPlan] = {
-    // reference-identity set (identityHashCode alone can collide,
-    // which would silently skip a distinct cached plan — a blind spot
-    // in the very sweep meant to remove blind spots)
-    val seen = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
     def go(p: SparkPlan): Seq[SparkPlan] =
       p.collectWithSubqueries { case n => n }.flatMap {
-        case im: InMemoryTableScanExec =>
-          if (seen.add(im.relation.cachedPlan)) im +: go(im.relation.cachedPlan)
-          else Seq(im)
         case a: AdaptiveSparkPlanExec => a +: go(a.inputPlan)
         case n => Seq(n)
       }
@@ -150,9 +122,15 @@ class PlanPinSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"plan pin: $name") {
-      drainBuilds()
+      builds.drain()
       val df = fn(spark, sf)
-      val nodes = expand(df.queryExecution.sparkPlan +: drainBuilds())
+      val nodes = expand(df.queryExecution.sparkPlan +: builds.drain().map(_.sparkPlan))
+      // cleared before any assertion, so one leak fails only its own query
+      val cached = !cacheManager.isEmpty
+      cacheManager.clearCache()
+      assert(!cached, s"$name left a CacheManager entry behind")
+      assert(!nodes.exists(_.nodeName == "InMemoryTableScan"),
+        s"$name plans a cached relation:\n${df.queryExecution.sparkPlan}")
       if (!cartesianOk(name))
         assert(!nodes.exists(_.nodeName.contains("CartesianProduct")),
           s"$name plan has an unbroadcast cartesian join:\n${df.queryExecution.sparkPlan}")

@@ -434,15 +434,6 @@ class ServingSpec extends AnyFunSuite with BeforeAndAfterAll {
   // server is filled by then, so its prefetch threads start no more
   // jobs and any active job belongs to the server under test.
 
-  /** Deliver pending listener events (execution-listener callbacks and
-    * the status store's job ends). `listenerBus.waitUntilEmpty` is
-    * public in bytecode. */
-  private def drainListeners(): Unit = {
-    val sc = spark.sparkContext
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-  }
-
   private def prefetchThreads(srv: QueryServer): Seq[Thread] =
     Thread.getAllStackTraces.keySet.asScala.toSeq
       .filter(t => t.isAlive && t.getName.startsWith(srv.prefetchGroup))
@@ -481,12 +472,12 @@ class ServingSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(getAt(port, "/gmall/realtime/trade/total")._1 == 200)
       // no further requests: the prefetch threads alone collect the rest
       awaitUntil("the prefetch threads to collect every unbound sugar query") {
-        drainListeners(); collects.size >= unbound.size
+        Bench.drain(spark.sparkContext); collects.size >= unbound.size
       }
       assert(unbound.map(q => s"sugar:$q").toSet.subsetOf(srv.cachedKeys))
       assert(!srv.cachedKeys.exists(_.startsWith(s"sugar:$bound")), "a bound name was prefetched")
     } finally srv.stop()
-    drainListeners()
+    Bench.drain(spark.sparkContext)
     // attribute each collect to its query by plan and output names
     // (ads_gmv and ads_trade_total_amount differ only in a column
     // name); every memo frame exists by now, so planning builds nothing
@@ -510,7 +501,7 @@ class ServingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(getAt(port, "/gmall/realtime/traffic/uvCt")._1 == 200)
     srv.stop()
     assert(prefetchThreads(srv).isEmpty, "prefetch threads outlived stop()")
-    drainListeners()
+    Bench.drain(spark.sparkContext)
     assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty, "a Spark job outlived stop()")
   }
 

@@ -238,6 +238,32 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed == batch)
   }
 
+  test("M1: unionTumbling's 13 s watermark counts a row 10 s late; tumbling's 2 s drops it") {
+    import spark.implicits._
+    // two input streams, unioned and windowed; Update mode emits each
+    // window as it changes, so a dropped row leaves its window absent
+    def run(name: String, windowed: Seq[org.apache.spark.sql.DataFrame] =>
+        org.apache.spark.sql.DataFrame): Map[String, Long] = {
+      val a = MemoryStream[(Timestamp, Long)](spark)
+      val b = MemoryStream[(Timestamp, Long)](spark)
+      val q = windowed(Seq(a, b).map(_.toDS().toDF("ts", "user_id")))
+        .select("stt", "pv").writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Update).start()
+      try {
+        a.addData((ts(125), 1L)); q.processAllAvailable()
+        // 10 s behind the max event time, in the [110, 120) window that
+        // ends before 125 - 2 but after 125 - 13
+        b.addData((ts(115), 2L)); q.processAllAvailable()
+      } finally q.stop()
+      spark.table(name).as[(String, Long)].collect().toMap
+    }
+    val pv = Seq(count(lit(1)).as("pv"))
+    val union = run("m1_union", Windows.unionTumbling(_, "ts", Nil, pv))
+    val single = run("m1_tumbling", p => Windows.tumbling(p.reduce(_ unionByName _), "ts", Nil, pv))
+    assert(union == Map("1970-01-01 00:02:00" -> 1L, "1970-01-01 00:01:50" -> 1L))
+    assert(single == Map("1970-01-01 00:02:00" -> 1L))
+  }
+
   test("state partitions follow shufflePartitions (TestSession: 4), not AQE's batch initial width") {
     import spark.implicits._
     val mem = MemoryStream[(Long, Long)](spark)
