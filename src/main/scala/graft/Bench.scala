@@ -2,14 +2,18 @@ package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
   /** Task-metric accumulator for the per-query I/O report: shuffle
-    * bytes written/read, spill, and max single-task peak execution
-    * memory. Unlike wall seconds these are DETERMINISTIC for a given
+    * bytes and records written, bytes read, spill, and max single-task
+    * peak execution memory. Record counts are deterministic for a given
     * plan + data, so their scaling exponents across amplified decades
-    * (tools/decade.py --field) are noise-free evidence — a plan whose
-    * shuffle volume grows super-linearly is a scale-killer even when
-    * task-overhead floors hide it in the timings. */
+    * (tools/decade.py --field shuffle_records) carry no noise — a plan
+    * whose shuffle volume grows super-linearly is a scale-killer even
+    * when task-overhead floors hide it in the timings. Bytes are not:
+    * a range-sorted query's bounds come from a sample seeded by the RDD
+    * id, so its bytes move by a few hundred with whatever the session
+    * ran before, while its records stay put. */
   private final class IoListener extends org.apache.spark.scheduler.SparkListener {
     val shufWrite = new java.util.concurrent.atomic.AtomicLong
+    val shufRecords = new java.util.concurrent.atomic.AtomicLong
     val shufRead = new java.util.concurrent.atomic.AtomicLong
     val spill = new java.util.concurrent.atomic.AtomicLong
     val peakMem = new java.util.concurrent.atomic.AtomicLong
@@ -17,13 +21,14 @@ object Bench {
       val m = t.taskMetrics
       if (m != null) {
         shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+        shufRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten)
         shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
         spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
         peakMem.accumulateAndGet(m.peakExecutionMemory, Math.max(_, _))
       }
     }
-    def snapshot: (Long, Long, Long, Long) =
-      (shufWrite.get, shufRead.get, spill.get, peakMem.get)
+    def snapshot: (Long, Long, Long, Long, Long) =
+      (shufWrite.get, shufRead.get, spill.get, peakMem.get, shufRecords.get)
     // the byte counters diff across snapshots; the max doesn't — reset
     // it (post-drain) so each report window gets its own peak
     def resetPeak(): Unit = peakMem.set(0L)
@@ -63,6 +68,13 @@ object Bench {
     t
   }
 
+  /** Whole-JVM codegen counters: (classes compiled, compile ms). Both
+    * are global to the JVM, driver and task threads alike; a compile
+    * that hits `CodeGenerator`'s cache counts in neither. */
+  private def codegen: (Long, Long) =
+    (org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1000000L)
+
   /** Locale-independent numeric rendering — the f"" interpolator uses
     * the JVM default locale, which on a comma-decimal locale would
     * emit "1,234" and break the JSON line the driver parses. */
@@ -99,6 +111,7 @@ object Bench {
     // is charged to its own "warmup_sec" line.
     val warm0 = System.nanoTime()
     val warmGc0 = gcMs
+    val warmCg0 = codegen
     selected.foreach { case (name, fn) =>
       if (!spark.sparkContext.isStopped)
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -114,6 +127,7 @@ object Bench {
     }
     val warmupSec = (System.nanoTime() - warm0) / 1e9
     val warmupGcMs = gcMs - warmGc0
+    val warmCg1 = codegen
     // once a query kills the SparkContext (the OOM cascade in SCALE.md's
     // memory finding stopped it from an executor thread), every later
     // query fails with the meaningless "stopped SparkContext" — flag the
@@ -146,10 +160,12 @@ object Bench {
           val r1 = once()
           drain(spark.sparkContext); val s1 = io.snapshot; io.resetPeak()
           val g1 = gcMs
+          val c1 = codegen
           val r2 = once()
           drain(spark.sparkContext); val s2 = io.snapshot
           val g2 = gcMs
-          Some((r1, r2, s1, s2, g1 - g0, g2 - g1))
+          val c2 = codegen
+          Some((r1, r2, s1, s2, g1 - g0, g2 - g1, (c2._1 - c1._1, c2._2 - c1._2)))
         }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name: $e"); errors += name
@@ -162,11 +178,13 @@ object Bench {
           None
         }
       timed match {
-        case Some((r1, r2, s1, s2, gc1, gc2)) =>
+        case Some((r1, r2, s1, s2, gc1, gc2, cg)) =>
           runsJson += s"\"$name\":[${num(r1)},${num(r2)}]"
           ioJson += s"\"$name\":{\"shuffle_write\":${s2._1 - s1._1}," +
+            s"\"shuffle_records\":${s2._5 - s1._5}," +
             s"\"shuffle_read\":${s2._2 - s1._2},\"spilled\":${s2._3 - s1._3}," +
-            s"\"peak_task_mem\":${s2._4},\"gc_ms\":[$gc1,$gc2]}"
+            s"\"peak_task_mem\":${s2._4},\"gc_ms\":[$gc1,$gc2]," +
+            s"\"codegen_compiles\":${cg._1},\"codegen_ms\":${cg._2}}"
           // a failed query records -1, not its meaningless elapsed time —
           // broken must be distinguishable from fast in the JSON alone
           name -> math.min(r1, r2)
@@ -187,7 +205,7 @@ object Bench {
     // ok:false marks a run whose total excludes failed queries — a smaller
     // value than a clean run's must never be read as a speedup
     val ok = errors.isEmpty
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","ok":$ok,"queries":$qs,"runs":${runsJson.mkString("{", ",", "}")},"io":${ioJson.mkString("{", ",", "}")},"errors":$errs,"warmup_sec":${num(warmupSec)},"warmup_gc_ms":$warmupGcMs,"gc_total_ms":${gcMs},"cpu_vs_wall":${num(wallVsCpu)},"load_avg_start":${num(loadStart)},"load_avg_end":${num(osBean.getSystemLoadAverage)},"memo_level":"${spark.conf.get(graft.operators.Memo.LevelConf, "MEMORY_AND_DISK")}","memo_level_resolved":"${graft.operators.Memo.level(spark)}","sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","ok":$ok,"queries":$qs,"runs":${runsJson.mkString("{", ",", "}")},"io":${ioJson.mkString("{", ",", "}")},"errors":$errs,"warmup_sec":${num(warmupSec)},"warmup_gc_ms":$warmupGcMs,"warmup_codegen_compiles":${warmCg1._1 - warmCg0._1},"warmup_codegen_ms":${warmCg1._2 - warmCg0._2},"gc_total_ms":${gcMs},"cpu_vs_wall":${num(wallVsCpu)},"load_avg_start":${num(loadStart)},"load_avg_end":${num(osBean.getSystemLoadAverage)},"memo_level":"${spark.conf.get(graft.operators.Memo.LevelConf, "MEMORY_AND_DISK")}","memo_level_resolved":"${graft.operators.Memo.level(spark)}","sf":"$sfDir"}"""
     println(json)
     // the driver's BENCH capture truncates long stdout lines, losing
     // "total" and half the per-query map; the full JSON on disk keeps

@@ -15,6 +15,9 @@ Usage: python3 tools/decade.py <bench1.json> <bench2.json> [more...] [--out MD]
 """
 import sys, json, math, argparse
 
+# graft.Bench 'io' fields measured in bytes; every other field is a count
+BYTE_FIELDS = {"shuffle_write", "shuffle_read", "spilled", "peak_task_mem"}
+
 
 def main():
     ap = argparse.ArgumentParser()
@@ -22,10 +25,12 @@ def main():
     ap.add_argument("--labels", default=None,
                     help="comma-separated column labels, one per bench file")
     ap.add_argument("--field", default=None,
-                    help="exponents over an 'io' field (shuffle_write, "
-                         "shuffle_read, spilled, peak_task_mem) instead of "
-                         "seconds — deterministic for a given plan + data, "
-                         "so these exponents carry no timing noise")
+                    help="exponents over an 'io' field instead of seconds: "
+                         "bytes (shuffle_write, shuffle_read, spilled, "
+                         "peak_task_mem) or counts (shuffle_records, "
+                         "codegen_compiles); shuffle_records is deterministic "
+                         "for a given plan + data, so its exponents carry no "
+                         "timing noise")
     ap.add_argument("--out", default=None)
     args = ap.parse_args()
     if len(args.benches) < 2:
@@ -50,9 +55,10 @@ def main():
         es = [math.log10(ts[i + 1] / ts[i]) for i in range(len(ts) - 1)]
         rows.append((q, ts, es))
     rows.sort(key=lambda r: -r[2][-1])
-    unit = " MB" if args.field else " s"
+    in_mb = args.field in BYTE_FIELDS
+    unit = " MB" if in_mb else "" if args.field else " s"
     def fmt(v):
-        return f"{v / 1e6:.1f}" if args.field else f"{v:.2f}"
+        return f"{v / 1e6:.1f}" if in_mb else f"{v}" if args.field else f"{v:.2f}"
     head = ["query"] + [f"{l}{unit}" for l in labels] + \
         [f"e {labels[i]}→{labels[i+1]}" for i in range(len(labels) - 1)]
     lines = ["| " + " | ".join(head) + " |",
