@@ -32,6 +32,20 @@ import org.apache.spark.sql.SparkSession
   * conf, so a `file:` instance created before this session's conf
   * (outside `GraftSession`) stays the stock class; `FileContext` is
   * resolved afresh per call.
+  *
+  * Generated code compiles once per JVM. `CodeGenerator` caches a
+  * compiled class by (thread context loader, source), and in local mode
+  * the driver compiles every whole-stage class before its tasks do.
+  * Session artifact isolation is off, because nothing in the engine
+  * adds session artifacts (no `addArtifact` or `addJar`) and with it on
+  * each session's tasks run under a per-session loader that the driver
+  * cannot reach. [[graft.CodegenLoader]] then puts the creating thread
+  * under the executor's default task loader, so tasks find the driver's
+  * cache entry: one `dashboard_refresh` pass went from 502 compiles
+  * (19.9 s summed over threads) to 300 (10.8 s). Spark's cache size
+  * (`spark.sql.codegen.cache.maxEntries`, 100) stays: with the loaders
+  * aligned about 31 repeat compiles are left, and 4096 entries cost
+  * about 4 MB of live heap.
   */
 object GraftSession {
   /** Local task threads: `SPARK_GRAFT_CPUS`, else the host's cores. The
@@ -93,6 +107,9 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       .config("spark.ui.enabled", "false")
+      // one codegen cache entry per class: see the scaladoc above
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.extraListeners", classOf[CodegenLoader].getName)
       .config("spark.hadoop.fs.file.impl", classOf[graft.sources.ForkFreeLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.sources.ForkFreeLocalFs].getName)
     // Memo backend override (a StorageLevel name or PARQUET) for
