@@ -21,8 +21,9 @@ import org.apache.spark.serializer.Serializer
   * the task scheduler has started; a local backend has built its
   * `Executor` by then, which hands its default task loader to
   * `SparkEnv.serializer`. Threads started afterwards inherit the
-  * loader: `QueryServer`'s handler and prefetch threads, the AQE and
-  * broadcast exchange pools, stream execution threads. Threads that
+  * loader: `QueryServer`'s handler and prefetch threads, the
+  * shuffle-exchange, broadcast-exchange and result-stage pools that AQE
+  * materializes stages on, stream execution threads. Threads that
   * were already running keep theirs and still compile twice. With no
   * local executor (a cluster master) the serializer has no default
   * loader and this does nothing.

@@ -41,11 +41,10 @@ import org.apache.spark.sql.SparkSession
   * each session's tasks run under a per-session loader that the driver
   * cannot reach. [[graft.CodegenLoader]] then puts the creating thread
   * under the executor's default task loader, so tasks find the driver's
-  * cache entry: one `dashboard_refresh` pass went from 502 compiles
-  * (19.9 s summed over threads) to 300 (10.8 s). Spark's cache size
-  * (`spark.sql.codegen.cache.maxEntries`, 100) stays: with the loaders
-  * aligned about 31 repeat compiles are left, and 4096 entries cost
-  * about 4 MB of live heap.
+  * cache entry: one perfbench `dashboard_refresh` pass went from 499
+  * compiles of 269 classes to 293 (SCALE.md, "Cold path: codegen").
+  * Spark's cache size (`spark.sql.codegen.cache.maxEntries`, 100)
+  * stays: with the loaders aligned few repeat compiles are left.
   */
 object GraftSession {
   /** Local task threads: `SPARK_GRAFT_CPUS`, else the host's cores. The

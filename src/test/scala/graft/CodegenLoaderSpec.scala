@@ -28,15 +28,20 @@ class CodegenLoaderSpec extends AnyFunSuite {
     CodegenLoaderSpec.seen.get
   }
 
-  /** Classes compiled JVM-wide while `body` runs on a new thread with
-    * context loader `loader`. */
-  private def compilesOn(loader: ClassLoader)(body: => Unit): Long = {
-    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+  /** Runs `body` on a new thread whose context loader is `loader`. */
+  private def onThread(loader: ClassLoader)(body: => Unit): Unit = {
     val failure = new AtomicReference[Throwable]
     val t = new Thread(() => try body catch { case e: Throwable => failure.set(e) })
     t.setContextClassLoader(loader)
     t.start(); t.join()
     Option(failure.get).foreach(e => throw e)
+  }
+
+  /** Classes compiled JVM-wide while `body` runs on a new thread with
+    * context loader `loader`. */
+  private def compilesOn(loader: ClassLoader)(body: => Unit): Long = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    onThread(loader)(body)
     CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
   }
 
@@ -72,23 +77,21 @@ class CodegenLoaderSpec extends AnyFunSuite {
 
   test("application end restores the creating thread's loader, so executor loaders do not chain") {
     val app = classOf[CodegenLoaderSpec].getClassLoader
-    val parents = new AtomicReference[Seq[ClassLoader]]
-    compilesOn(app) {
-      // an Executor parents its loader on the creating thread's context loader
-      def executorLoader() = new java.net.URLClassLoader(Array.empty, Thread.currentThread.getContextClassLoader)
-      val first = executorLoader()
-      val hook1 = new CodegenLoader(Some(first))
-      assert(Thread.currentThread.getContextClassLoader eq first)
-      hook1.onApplicationEnd(SparkListenerApplicationEnd(0L))
-      val second = executorLoader()
-      val hook2 = new CodegenLoader(Some(second))
-      assert(Thread.currentThread.getContextClassLoader eq second)
-      hook2.onApplicationEnd(SparkListenerApplicationEnd(0L))
+    def current = Thread.currentThread.getContextClassLoader
+    onThread(app) {
+      for (_ <- 1 to 2) {
+        // an Executor parents its loader on the creating thread's context loader
+        val executorLoader = new java.net.URLClassLoader(Array.empty, current)
+        assert(executorLoader.getParent eq app)
+        val hook = new CodegenLoader(Some(executorLoader))
+        assert(current eq executorLoader)
+        hook.onApplicationEnd(SparkListenerApplicationEnd(0L))
+        assert(current eq app)
+      }
       // no local executor: the thread keeps its loader
       new CodegenLoader(None)
-      parents.set(Seq(first.getParent, second.getParent, Thread.currentThread.getContextClassLoader))
+      assert(current eq app)
     }
-    assert(parents.get.forall(_ eq app))
   }
 }
 
