@@ -4,13 +4,17 @@ object Bench {
   /** Task-metric accumulator for the per-query I/O report: shuffle
     * bytes and records written, bytes read, spill, and max single-task
     * peak execution memory. Record counts are deterministic for a given
-    * plan + data, so their scaling exponents across amplified decades
+    * final plan + data, so their scaling exponents across amplified decades
     * (tools/decade.py --field shuffle_records) carry no noise — a plan
     * whose shuffle volume grows super-linearly is a scale-killer even
     * when task-overhead floors hide it in the timings. Bytes are not:
     * a range-sorted query's bounds come from a sample seeded by the RDD
     * id, so its bytes move by a few hundred with whatever the session
-    * ran before, while its records stay put. */
+    * ran before, while its records stay put. The final plan can move:
+    * AQE re-plans as stages finish, and `an_mad_outliers` at sf0.1
+    * ends in one of two plans depending on stage timing (7,205 or
+    * 7,210 records: one broadcast choice drops a 5-record exchange;
+    * SCALE.md). */
   private final class IoListener extends org.apache.spark.scheduler.SparkListener {
     val shufWrite = new java.util.concurrent.atomic.AtomicLong
     val shufRecords = new java.util.concurrent.atomic.AtomicLong

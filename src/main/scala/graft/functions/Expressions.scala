@@ -50,7 +50,6 @@ object GraftExpressions {
   def nearestCentroidsFloat(vec: Column, centIds: Array[Int], cents: Array[Array[Float]], k: Int): Column =
     toColumn(NearestCentroidsFloat(toExpression(vec), centIds, cents, k))
   def segmentTokens(c: Column): Column = toColumn(SegmentTokens(toExpression(c)))
-  def maxwellParse(c: Column): Column = toColumn(MaxwellParse(toExpression(c)))
   def jsonParse(c: Column, schema: StructType): Column =
     toColumn(SchemaJsonParse(toExpression(c), schema))
   def mediaHeader(c: Column): Column = toColumn(MediaHeaderInfo(toExpression(c)))
@@ -161,49 +160,18 @@ case class SegmentTokens(child: Expression) extends UnaryExpression {
     copy(newChild)
 }
 
-/** Maxwell CDC envelope parse (S3's per-record hot path): string →
-  * struct<database,table,type,data:map,old:map,ts:long>, null on
-  * malformed input (the P1 dirty-quarantine contract). `from_json`
-  * parity is spec-pinned; the point of the native expression is
-  * performance at ingest volume: `JsonToStructs` is a
-  * `CodegenFallback` — it drags the whole collapsed projection into
-  * interpreted eval and allocates a Reader+decoder+text-buffer stack
-  * per row — while this compiles to one static call over the string's
-  * bytes inside whole-stage codegen (see [[MaxwellJson]] for the
-  * measured 10× on the CDC envelope build).
-  */
-case class MaxwellParse(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = MaxwellJson.schema
-
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftTypeChecks.expect(child.dataType == StringType,
-      s"graft_maxwell_parse requires a string argument, got ${child.dataType.sql}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    MaxwellJson.parse(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""
-         |${ev.value} = graft.functions.MaxwellJson.parse($c);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): MaxwellParse =
-    copy(newChild)
-}
-
-/** Schema-driven native JSON parse (P1's per-record hot path for the
-  * page-log shape): string → the given struct, null on malformed
-  * input. The nested-struct generalization of [[MaxwellParse]] —
-  * `from_json` PERMISSIVE partial-results parity is spec-pinned in
-  * PageLogParseSpec; the point is the same as MaxwellParse's: no
-  * CodegenFallback, no per-row Reader stack, the surrounding
-  * projection stays fused in whole-stage codegen. The compiled
-  * converter tree ([[SchemaJsonParser]]) is built once and shipped to
-  * executors as a codegen reference object. */
+/** Schema-driven native JSON parse, P1's per-record hot path for both
+  * reference ingest topics: string → the given struct, null on
+  * malformed input (the dirty-quarantine contract). `topic_log` parses
+  * against `LogStream.pageLogSchema`, `topic_db` against
+  * `LogStream.maxwellSchema` (also registered in SQL as
+  * `graft_maxwell_parse`). `from_json` PERMISSIVE partial-results
+  * parity is spec-pinned for both schemas; the point is performance:
+  * no CodegenFallback, no per-row Reader stack, the surrounding
+  * projection stays fused in whole-stage codegen. A schema outside
+  * [[SchemaJson.supports]] fails analysis. The compiled converter tree
+  * ([[SchemaJsonParser]]) is built once and shipped to executors as a
+  * codegen reference object. */
 case class SchemaJsonParse(child: Expression, schema: StructType)
     extends UnaryExpression {
   override def dataType: DataType = schema

@@ -61,7 +61,8 @@ class GraftSqlExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction((FunctionIdentifier("graft_maxwell_parse"),
       info("graft_maxwell_parse",
         "graft_maxwell_parse(str) - Maxwell CDC envelope: struct(database,table,type,data,old,ts); null if malformed"),
-      (args: Seq[Expression]) => { arity(args, 1, "graft_maxwell_parse"); MaxwellParse(args.head) }))
+      (args: Seq[Expression]) => { arity(args, 1, "graft_maxwell_parse")
+        SchemaJsonParse(args.head, graft.streaming.LogStream.maxwellSchema) }))
 
     ext.injectFunction((FunctionIdentifier("graft_media_header"),
       info("graft_media_header",

@@ -7,22 +7,31 @@ import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Schema-driven native JSON parser behind [[SchemaJsonParse]] — the
-  * nested-struct generalization of [[MaxwellJson]], built for the
-  * reference's highest-volume ingest: `BaseLogApp.java:41-62` parses
-  * EVERY `topic_log` record against the page-log shape (nested
-  * structs, arrays of structs, longs), and `from_json` there pays the
-  * same CodegenFallback + per-row Reader/StreamDecoder/TextBuffer
-  * stack that was measured as 10× on the Maxwell path (see
-  * [[MaxwellJson]]'s scaladoc for the breakdown). The schema is
-  * compiled ONCE into a converter tree (per-struct name→index
-  * hashmaps); per row this reads the UTF8String's bytes
-  * Jackson-native and allocates only the output values.
+/** Schema-driven native JSON parser behind [[SchemaJsonParse]], the
+  * one parser for both reference ingest topics: `BaseLogApp.java:41-62`
+  * parses EVERY `topic_log` record against the page-log shape (nested
+  * structs, arrays of structs, longs), and the `topic_db` consumers
+  * (`MyKafkaUtil.java:91-100`) parse every Maxwell envelope (string
+  * maps, a long).
+  *
+  * Why not `from_json`: `JsonToStructs` is a `CodegenFallback`, so the
+  * projection containing it (after CollapseProject, typically the
+  * WHOLE parse-and-project stage) drops out of whole-stage codegen
+  * into per-row interpreted eval, and its generic `JacksonParser`
+  * allocates an InputStreamReader + StreamDecoder + CharsetDecoder +
+  * read-constrained TextBuffer PER ROW (`CreateJacksonParser.utf8String`)
+  * — measured as an allocation/GC storm that made the CDC envelope
+  * build 10× slower than the scan it wraps. The schema is compiled
+  * ONCE into a converter tree (per-struct name→index hashmaps); per
+  * row this reads the UTF8String's bytes Jackson-native (no Reader, no
+  * charset decode pass — JSON is already UTF-8) and allocates only the
+  * output values.
   *
   * Semantics are `from_json(value, schema)` PERMISSIVE parity with
   * partial results (`spark.sql.json.enablePartialResults`, default on
-  * since 3.4), pinned case-by-case in PageLogParseSpec by running
-  * BOTH parsers over the same lines. The rules, as probed on Spark
+  * since 3.4), pinned case-by-case for both ingest schemas (the page
+  * log in PageLogParseSpec, the envelope in its own parse spec) by
+  * running BOTH parsers over the same lines. The rules, as probed on Spark
   * 4.1.2 and encoded here:
   *
   *  - malformed / truncated / non-object root → null record (the P1
@@ -45,8 +54,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Supported leaf types: string, long, map<string,string>; nested
   * structs and arrays compose freely ([[SchemaJson.supports]]).
   * That is the full type surface of the reference's ingest schemas;
-  * anything else falls back to `from_json` in `LogStream.parse` so
-  * correctness never depends on this parser's coverage.
+  * [[SchemaJsonParse]] rejects any other schema at analysis time.
   */
 object SchemaJson {
   private[functions] val factory = new JsonFactory() // thread-safe for createParser
@@ -234,8 +242,9 @@ final class SchemaJsonParser(schema: StructType) extends Serializable {
       // CharConversionException (an IOException, NOT a
       // JsonProcessingException); Spark's JacksonParser quarantines it
       // explicitly, so PERMISSIVE parity requires catching it here or
-      // one garbage record poison-pills the streaming query. Genuine
-      // parser bugs must still propagate (same contract as MaxwellJson).
+      // one garbage record poison-pills the streaming query. A blanket
+      // RuntimeException catch would turn genuine parser bugs into
+      // silent dirty-data loss, so those still propagate.
       case SchemaJson.Fail => null
       case _: com.fasterxml.jackson.core.JsonProcessingException => null
       case _: java.io.CharConversionException => null

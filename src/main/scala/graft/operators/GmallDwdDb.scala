@@ -54,7 +54,7 @@ import graft.streaming.{Joins, LogStream}
   * inserts/updates are synthesized as JSON strings by key-modulus rules
   * (including negative cases each filter must reject), then parsed
   * through the REAL ingest path (`LogStream.maxwellEnvelope` →
-  * `from_json`) — so the queries exercise envelope parsing, map-key
+  * `graft_json_parse`) — so the queries exercise envelope parsing, map-key
   * projection, `old`-map change predicates, and the dim joins, and the
   * DuckDB oracle can reproduce every result directly from the base
   * tables with the same modulus rules.

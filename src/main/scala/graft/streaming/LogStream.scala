@@ -21,9 +21,10 @@ import org.apache.spark.sql.types._
   *  - P4  changed-column predicate (`DwdTradeCartAdd.java:56-59`)
   *
   * Scale notes: all of this is stateless row-at-a-time work — no
-  * shuffle, fully inside whole-stage codegen. `from_json` returns null
-  * on corrupt input, so the quarantine split is two filters over one
-  * pass, not a try/catch per record.
+  * shuffle, fully inside whole-stage codegen. Both topics parse through
+  * the one native [[graft.functions.SchemaJsonParse]], which returns
+  * null on corrupt input, so the quarantine split is two filters over
+  * one parse, not a try/catch per record.
   */
 object LogStream {
 
@@ -52,24 +53,25 @@ object LogStream {
 
   /** Maxwell CDC envelope: the gmall `topic_db` table shape
     * (`MyKafkaUtil.java:91-100`; `ts`+string-`old` variant at
-    * `DwdTradeOrderRefund.java:46-54`). Defined by the native parser
-    * (one definition — see [[graft.functions.MaxwellJson]]). */
-  val maxwellSchema: StructType = graft.functions.MaxwellJson.schema
+    * `DwdTradeOrderRefund.java:46-54`). */
+  val maxwellSchema: StructType = StructType(Seq(
+    StructField("database", StringType), StructField("table", StringType),
+    StructField("type", StringType),
+    StructField("data", MapType(StringType, StringType)),
+    StructField("old", MapType(StringType, StringType)),
+    StructField("ts", LongType)))
 
   /** P1: parse a raw string column; rows that fail to parse carry a
-    * null (or, in PERMISSIVE mode, all-null) struct. Returns the
-    * annotated frame; split with [[clean]] / [[dirty]] (two filters
-    * over one pass — the side-output analog of `DimApp.java:39-55`).
+    * null struct. Returns the annotated frame; split with [[clean]] /
+    * [[dirty]] (two filters over one pass — the side-output analog of
+    * `DimApp.java:39-55`).
     *
-    * Schemas inside [[graft.functions.SchemaJson.supports]]'s type
-    * surface (string/long leaves, nested structs, arrays, string
-    * maps — which covers BOTH reference ingest shapes) parse through
-    * the native codegen'd [[graft.functions.SchemaJsonParse]];
-    * `from_json`'s CodegenFallback + per-row Reader stack was
-    * measured 10× slower on the Maxwell path and `BaseLogApp.java`'s
-    * `topic_log` is the reference's highest-volume ingest. Anything
-    * outside that surface falls back to `from_json` (identical
-    * semantics, spec-pinned parity — see PageLogParseSpec).
+    * The parse is the native codegen'd
+    * [[graft.functions.SchemaJsonParse]] (parity with Spark's JSON reader,
+    * spec-pinned). Its type surface — string/long leaves, nested
+    * structs, arrays, string maps — covers both reference ingest
+    * shapes, [[pageLogSchema]] and [[maxwellSchema]]; any other schema
+    * fails analysis.
     *
     * The parse is wrapped in a one-element `explode` — a `Generate`
     * barrier. Without it, alias inlining (CollapseProject +
@@ -81,28 +83,23 @@ object LogStream {
     * whole build). `Generate` evaluates the generator once per row and
     * emits `parsed` as a real attribute, so field accesses downstream
     * are struct reads, not re-parses. `explode` of a 1-element array
-    * never drops or adds rows and is streaming-safe. */
-  def parse(raw: DataFrame, schema: StructType, column: String = "value"): DataFrame =
-    parseWith(raw,
-      if (graft.functions.SchemaJson.supports(schema))
-        graft.functions.GraftExpressions.jsonParse(col(column), schema)
-      else from_json(col(column), schema),
-      column)
-
-  /** Keeps EVERY input column (Kafka timestamp/partition metadata,
+    * never drops or adds rows and is streaming-safe.
+    *
+    * Keeps EVERY input column (Kafka timestamp/partition metadata,
     * caller-added fields) alongside `parsed` — the Generate barrier
     * needs a projection, not a narrowing one. A pre-existing column
     * named `parsed` would make every downstream `col("parsed")`
     * ambiguous (AnalysisException), so it is an error here, loudly. */
-  private def parseWith(raw: DataFrame, parser: Column, column: String): DataFrame = {
+  def parse(raw: DataFrame, schema: StructType, column: String = "value"): DataFrame = {
     require(!raw.columns.contains("parsed"),
       "input frame already has a column named 'parsed'; rename it before LogStream.parse")
+    val parser = graft.functions.GraftExpressions.jsonParse(col(column), schema)
     raw.select(raw.columns.map(col).toSeq :+ explode(array(parser)).as("parsed"): _*)
   }
 
-  /** `from_json` in PERMISSIVE mode maps malformed input to a struct
-    * whose every top-level field is null — indistinguishable from a
-    * parse failure, so both shapes are quarantined. */
+  /** A null struct is a parse failure. A struct whose every top-level
+    * field is null (`{}`, or an object carrying only unknown keys)
+    * holds nothing either, so both shapes are quarantined. */
   private def isDirty(parsed: DataFrame): Column = {
     val schema = parsed.schema("parsed").dataType.asInstanceOf[StructType]
     col("parsed").isNull ||
@@ -118,15 +115,10 @@ object LogStream {
 
   /** S3: Maxwell envelope with the processing-time ingest column
     * (`pt AS PROCTIME()` ≈ `current_timestamp()`, semantic difference
-    * documented in SURVEY.md §1.2). Parses via the native
-    * [[graft.functions.MaxwellParse]] expression — `from_json` parity
-    * (spec-pinned) with the whole projection kept in whole-stage
-    * codegen; `from_json`'s CodegenFallback + per-row Reader stack
-    * made envelope ingest the measured bottleneck of every CDC leg. */
+    * documented in SURVEY.md §1.2), parsed by [[parse]] over
+    * [[maxwellSchema]]. */
   def maxwellEnvelope(raw: DataFrame, column: String = "value"): DataFrame =
-    clean(parseWith(raw,
-        graft.functions.GraftExpressions.maxwellParse(col(column)), column))
-      .withColumn("pt", current_timestamp())
+    clean(parse(raw, maxwellSchema, column)).withColumn("pt", current_timestamp())
 
   /** P3: slice one table's change events out of the CDC firehose. */
   def cdcSlice(envelope: DataFrame, table: String, types: Seq[String]): DataFrame =
@@ -136,10 +128,12 @@ object LogStream {
   def columnChanged(oldCol: Column, key: String): Column =
     array_contains(map_keys(oldCol), key)
 
-  /** P10: five-way split of the parsed page log. One cached pass, five
-    * filtered projections; `displays`/`actions` are exploded with the
-    * parent fields pushed into each element, exactly as
-    * `BaseLogApp.java:134-160` does by hand. */
+  /** P10: five-way split of the parsed page log: five filtered
+    * projections of `log`, each re-reading it when run (a caller that
+    * runs several memoizes `log` first, as `GmallDwd.topicLog` does);
+    * `displays`/`actions` are exploded with the parent fields pushed
+    * into each element, exactly as `BaseLogApp.java:134-160` does by
+    * hand. */
   def splitLog(log: DataFrame): Map[String, DataFrame] = {
     val err = log.filter(col("err").isNotNull)
     val start = log.filter(col("err").isNull && col("start").isNotNull)

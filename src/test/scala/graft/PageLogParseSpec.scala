@@ -127,7 +127,7 @@ class PageLogParseSpec extends AnyFunSuite {
     val raw = org.apache.spark.unsafe.types.UTF8String.fromBytes(
       Array(0x00, 0x00, 0x00, 0x7b, 0xff, 0xff, 0xff, 0xff).map(_.toByte))
     assert(new graft.functions.SchemaJsonParser(LogStream.pageLogSchema).parse(raw) == null)
-    assert(graft.functions.MaxwellJson.parse(raw) == null)
+    assert(new graft.functions.SchemaJsonParser(LogStream.maxwellSchema).parse(raw) == null)
   }
 
   test("from_json parity on float scalars landing in string fields: the double re-render") {
@@ -142,24 +142,6 @@ class PageLogParseSpec extends AnyFunSuite {
     val (native, builtin) = bothParses(lines, LogStream.pageLogSchema)
     assert(native === builtin)
     assert(native.head.getStruct(0).getStruct(0).getString(0) === "150.0")
-  }
-
-  test("the generic parser matches the specialized MaxwellParse surface too (one semantics, two entry points)") {
-    // LogStream.parse routes ANY supported schema through
-    // SchemaJsonParse — including the Maxwell envelope schema (string
-    // maps + long). Re-run MaxwellParseSpec's battery shape through
-    // the GENERIC parser vs from_json so the two native parsers can
-    // never drift apart on the shared type surface.
-    val lines = Seq(
-      """{"database":"gmall","table":"order_info","type":"insert","data":{"id":"1","total_amount":"12.34"},"old":{"order_status":"1001"},"ts":1690000000}""",
-      """{"table":"t","data":{"n":42,"f":1.5,"b":true,"z":null,"nested":{"a":[1,2]}},"ts":2}""",
-      """{"table":"t","data":"not-an-object","ts":1}""",
-      """{"table":"t","data":["a","b"],"ts":1}""",
-      """{"table":"t","ts":"not-a-number"}""",
-      """{"table":"t","ts":99999999999999999999}""",
-      """{"table":17,"ts":1""")
-    val (native, builtin) = bothParses(lines, LogStream.maxwellSchema)
-    assert(native === builtin)
   }
 
   test("end-to-end: the topic_log fixture parses identically through both paths") {
@@ -214,15 +196,16 @@ class PageLogParseSpec extends AnyFunSuite {
       s"expected from_json projection outside codegen; plan:\n$fbPlan")
   }
 
-  test("unsupported schemas fall back to from_json (correctness never depends on native coverage)") {
+  test("an unsupported schema fails analysis with graft_json_parse's message") {
     import graft.functions.SchemaJson
     assert(SchemaJson.supports(LogStream.pageLogSchema))
     assert(SchemaJson.supports(LogStream.maxwellSchema))
     val unsupported = StructType(Seq(StructField("d", DoubleType)))
     assert(!SchemaJson.supports(unsupported))
     import spark.implicits._
-    val parsed = LogStream.parse(Seq("""{"d":1.5}""").toDF("value"), unsupported)
-    assert(parsed.select(col("parsed.d")).as[Double].collect() === Array(1.5))
-    assert(!parsed.queryExecution.optimizedPlan.toString.toLowerCase.contains("graft_json_parse"))
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      LogStream.parse(Seq("""{"d":1.5}""").toDF("value"), unsupported))
+    assert(e.getMessage.contains(
+      "graft_json_parse requires a string argument and a supported schema"), e.getMessage)
   }
 }

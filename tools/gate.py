@@ -29,9 +29,7 @@ against the budget (default: the last leg).
 import sys, json, argparse
 
 import compare
-from oracle_bench import time_oracles
-
-ORACLE_BUDGET_SEC = 30.0
+from oracle_bench import ORACLE_BUDGET_SEC, time_oracles
 
 
 def main():

@@ -19,6 +19,9 @@ import sys, json, time, argparse
 
 import compare
 
+# The per-oracle wall bound in seconds; tools/gate.py imports it.
+ORACLE_BUDGET_SEC = 30.0
+
 
 def time_oracles(sf_dir, oracles):
     """Run every oracle SQL once in DuckDB over sf_dir's tables.
@@ -44,7 +47,7 @@ def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("sf_dir")
     ap.add_argument("oracle_json")
-    ap.add_argument("--budget", type=float, default=30.0,
+    ap.add_argument("--budget", type=float, default=ORACLE_BUDGET_SEC,
                     help="hard per-oracle wall budget in seconds (exit 1)")
     ap.add_argument("--warn", type=float, default=3.0,
                     help="advisory per-oracle threshold")
